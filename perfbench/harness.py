@@ -349,9 +349,10 @@ def mismatches(con, got: str, ref: str, keys: list[str], float_cols=(),
         if c in keys:
             continue
         if c in float_cols:
+            # NULL against a number is a difference, not an unknown
             diffs.append(
-                f"NOT ((g.{c} IS NULL AND r.{c} IS NULL) OR "
-                f"abs(g.{c} - r.{c}) <= {rel_tol} * greatest(1.0, abs(r.{c})))"
+                f"(g.{c} IS DISTINCT FROM r.{c} AND coalesce("
+                f"abs(g.{c} - r.{c}) > {rel_tol} * greatest(1.0, abs(r.{c})), TRUE))"
             )
         else:
             diffs.append(f"g.{c} IS DISTINCT FROM r.{c}")

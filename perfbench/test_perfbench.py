@@ -44,11 +44,12 @@ def test_mismatches_counts_perturbed_missing_and_extra_rows():
                 "FROM range(10) t(i)")
     con.execute("CREATE TABLE same AS SELECT k, x * (1 + 1e-12) AS x, s FROM ref")
     assert harness.mismatches(con, "same", "ref", ["k"], float_cols=("x",)) == 0
-    con.execute("CREATE TABLE bad AS SELECT k, CASE WHEN k = 3 THEN x + 1 ELSE x "
-                "END AS x, CASE WHEN k = 4 THEN 'b' ELSE s END AS s FROM ref "
+    con.execute("CREATE TABLE bad AS SELECT k, CASE WHEN k = 3 THEN x + 1 "
+                "WHEN k = 5 THEN NULL ELSE x END AS x, "
+                "CASE WHEN k = 4 THEN 'b' ELSE s END AS s FROM ref "
                 "WHERE k != 7 UNION ALL SELECT 99, 0.0, 'z'")
-    # k=3 float, k=4 string, k=7 missing, k=99 extra
-    assert harness.mismatches(con, "bad", "ref", ["k"], float_cols=("x",)) == 4
+    # k=3 float, k=4 string, k=5 NULL float, k=7 missing, k=99 extra
+    assert harness.mismatches(con, "bad", "ref", ["k"], float_cols=("x",)) == 5
 
 
 def test_perturbed_output_fails_the_workload_check(tmp_path):
