@@ -251,12 +251,10 @@ def _proc_children() -> dict[int, list[int]]:
     for d in os.listdir("/proc"):
         if not d.isdigit():
             continue
-        try:
-            with open(f"/proc/{d}/stat") as f:
-                ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-        except (OSError, IndexError, ValueError):
+        st = _stat_fields(f"/proc/{d}/stat")
+        if st is None or len(st[1]) < 2:
             continue
-        kids.setdefault(ppid, []).append(int(d))
+        kids.setdefault(int(st[1][1]), []).append(int(d))
     return kids
 
 
@@ -295,6 +293,102 @@ class RssPeak:
         self.sample()
         jvm = _vm_hwm_kb(self.pid) / 1024.0
         return jvm + self.workers_kb / 1024.0, jvm
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def _stat_fields(path: str) -> Optional[tuple[str, list[str]]]:
+    """(comm, fields after it) of a /proc stat file, or None if gone."""
+    try:
+        with open(path) as f:
+            raw = f.read()
+    except OSError:
+        return None
+    head, _, rest = raw.rpartition(")")
+    return head[head.find("(") + 1:], rest.split()
+
+
+def _cpu_s(fields: list[str]) -> float:
+    """utime + stime in seconds."""
+    return (int(fields[11]) + int(fields[12])) / _TICK
+
+
+class WorkCpu:
+    """CPU seconds the program spends on its work: this process, the JVM
+    and the processes under it (the Python daemon and its workers), less
+    the JVM's JIT compiler threads.
+
+    CPU time, not wall time, because on a shared host the vCPUs lose a
+    varying share of every second to other tenants (steal time), which
+    stretches walls but not the CPU a process is charged. JIT compilation
+    is left out because it is JVM warm-up, not per-row work: it still runs
+    several iterations after the timed loop starts (the JVM is started
+    with a fixed set of compiler threads, so their count is complete).
+
+    The daemon ignores SIGCHLD, so a worker that exits takes its CPU time
+    with it: nothing reaps it into a parent's count. A sampler thread
+    therefore records every process of the tree each ``interval`` and
+    keeps the last reading of those that are gone; a worker loses at most
+    one interval. The sampler's own CPU, and that of threads the benchmark
+    runs (the stream generator) are subtracted."""
+
+    def __init__(self, jvm_pid: int, interval: float = 0.1) -> None:
+        import threading
+
+        self.pid = jvm_pid
+        self.interval = interval
+        #: (pid, start time) → last CPU reading, dead processes included
+        self._seen: dict[tuple[int, str], float] = {}
+        self._sampler_s = 0.0
+        self._lock = threading.Lock()
+        self._stop = threading.Event()
+        self._compilers = [
+            tid for tid in os.listdir(f"/proc/{jvm_pid}/task")
+            if "Compiler" in (_stat_fields(f"/proc/{jvm_pid}/task/{tid}/stat")
+                              or ("",))[0]
+        ]
+        self._thread = threading.Thread(target=self._loop, daemon=True)
+        self._thread.start()
+
+    def _scan(self) -> None:
+        kids = _proc_children()
+        todo = [self.pid]
+        while todo:
+            pid = todo.pop()
+            st = _stat_fields(f"/proc/{pid}/stat")
+            if st is not None:
+                self._seen[(pid, st[1][19])] = _cpu_s(st[1])
+            todo.extend(kids.get(pid, []))
+
+    def _loop(self) -> None:
+        while not self._stop.wait(self.interval):
+            c0 = time.thread_time()
+            with self._lock:
+                self._scan()
+                self._sampler_s += time.thread_time() - c0
+
+    def jit_s(self) -> float:
+        total = 0.0
+        for tid in self._compilers:
+            st = _stat_fields(f"/proc/{self.pid}/task/{tid}/stat")
+            if st is not None:
+                total += _cpu_s(st[1])
+        return total
+
+    def read(self) -> tuple[float, float]:
+        """(work CPU, JIT CPU), cumulative seconds."""
+        with self._lock:
+            self._scan()
+            tree = sum(self._seen.values())
+            sampler = self._sampler_s
+        own = os.times()
+        jit = self.jit_s()
+        return tree + own.user + own.system - sampler - jit, jit
+
+    def close(self) -> None:
+        self._stop.set()
+        self._thread.join()
 
 
 def mem_total_kb() -> int:

@@ -12,6 +12,7 @@ import json
 import os
 import subprocess
 import sys
+import time
 
 import pytest
 
@@ -52,6 +53,30 @@ def test_mismatches_counts_perturbed_missing_and_extra_rows():
     assert harness.mismatches(con, "bad", "ref", ["k"], float_cols=("x",)) == 5
 
 
+def test_work_cpu_counts_exited_children_of_a_sigchld_ignoring_parent():
+    """A parent that ignores SIGCHLD (as the Python daemon does) gets no
+    CPU time from children that exit; the sampler must keep it."""
+    burn = (
+        "import os, signal, time\n"
+        "signal.signal(signal.SIGCHLD, signal.SIG_IGN)\n"
+        "if os.fork() == 0:\n"
+        "    time.sleep(0.3)\n"
+        "    t = time.process_time()\n"
+        "    while time.process_time() - t < 0.5: pass\n"
+        "    os._exit(0)\n"
+        "time.sleep(2.5)\n"
+    )
+    p = subprocess.Popen([sys.executable, "-c", burn])
+    cpu = harness.WorkCpu(p.pid, interval=0.05)
+    try:
+        start = cpu.read()[0]
+        time.sleep(1.5)  # the worker has burnt its 0.5 s and exited
+        assert cpu.read()[0] - start >= 0.4
+    finally:
+        cpu.close()
+        p.wait()
+
+
 def test_perturbed_output_fails_the_workload_check(tmp_path):
     import argparse
 
@@ -64,8 +89,10 @@ def test_perturbed_output_fails_the_workload_check(tmp_path):
                               trace=0, scale=0.002)
     work = str(tmp_path / "work")
     spark = bench_run._start_spark(work, 2)
+    run = None
     try:
-        wl = BakeFlagship(bench_run.Run(args, spark, work))
+        run = bench_run.Run(args, spark, work)
+        wl = BakeFlagship(run)
         wl.generate()
         wl.load()
         wl.reference()
@@ -82,6 +109,8 @@ def test_perturbed_output_fails_the_workload_check(tmp_path):
         pq.write_table(t, path)
         assert wl.check(out) == t.num_rows
     finally:
+        if run is not None:
+            run.cpu.close()
         bench_run._stop_spark(spark)
 
 

@@ -11,11 +11,13 @@ from dataclasses import dataclass, field
 
 import harness
 
-#: a run measures at least two iterations even past --seconds: with one,
-#: the ten-seed spread (IQR / median) of train_serve's figures reached 0.27
-#: on a 4-core host, with two 0.14; a traced run needs one plain and one
-#: traced iteration anyway
+#: a run measures at least two iterations even past --seconds; a traced
+#: run needs one plain and one traced iteration anyway
 MIN_ITERS = 2
+#: unmeasured iterations after the checked one. On a 4-core host the work
+#: CPU of train_serve's first iterations read 20, 7.0, 5.9, 6.3 s while the
+#: JIT caught up; the timed loop starts at the third
+WARM_ITERS = 1
 
 
 @dataclass
@@ -61,7 +63,10 @@ class ClosedLoop:
         self.run.rss.sample()
         t0 = time.perf_counter()
         bad = self.check(out)
-        return bad, time.perf_counter() - t0
+        check_s = time.perf_counter() - t0
+        for _ in range(WARM_ITERS):
+            self.iterate(None)
+        return bad, check_s
 
     def measure(self, seconds: float) -> Measurement:
         run = self.run
@@ -77,9 +82,13 @@ class ClosedLoop:
             mark = run.acct.mark() if tracing else None
             attempted += 1
             i += 1
+            cpu0 = run.cpu.read()
             try:
                 with run.tracer.span("iteration"):
                     r = self.iterate(None)
+                cpu1 = run.cpu.read()
+                r["cpu_s"] = cpu1[0] - cpu0[0]
+                r["jit_s"] = cpu1[1] - cpu0[1]
             except Exception:
                 traceback.print_exc(file=sys.stderr)
                 failed += 1
@@ -105,21 +114,27 @@ class ClosedLoop:
                 for k in (layer_rows[0] if layer_rows else {})
             }
             m.layers.update(self.layers())
-            pw = harness.median(r["wall_s"] for r in plain)
-            tw = harness.median(r["wall_s"] for r in traced)
-            m.layers["trace.overhead_pct"] = 100.0 * (tw / pw - 1.0) if pw else 0.0
+            # in CPU, like the end-to-end figure: walls move with steal
+            pc = harness.median(r["cpu_s"] for r in plain)
+            tc = harness.median(r["cpu_s"] for r in traced)
+            m.layers["trace.overhead_pct"] = 100.0 * (tc / pc - 1.0) if pc else 0.0
         return m
 
     def e2e(self, results: list) -> dict:
+        rows = results[0]["rows"] if results else 0
+        cpu = harness.median(r["cpu_s"] for r in results)
+        return {"cpu_us_per_row": 1e6 * cpu / rows if rows else 0.0}
+
+    def report(self, results: list) -> dict:
         walls = [r["wall_s"] for r in results]
         rows = results[0]["rows"] if results else 0
         return {
             "rows_per_s": rows / harness.median(walls) if walls else 0.0,
             "latency_p50_ms": 1000.0 * harness.median(walls),
+            "wall_s": walls,
+            "cpu_s": [r["cpu_s"] for r in results],
+            "jit_cpu_s": [r["jit_s"] for r in results],
         }
-
-    def report(self, results: list) -> dict:
-        return {"wall_s": [r["wall_s"] for r in results]}
 
     def layers(self) -> dict:
         """Per-layer figures from the spans of the traced iterations."""

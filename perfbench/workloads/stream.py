@@ -8,8 +8,13 @@ and every row stamped with that due time (``created_at``).
 the running-features ``foreachBatch`` sink stamps emission, so latency runs
 from when a row was due to when its features were emitted.
 
-Leg 2 drains a pre-written backlog with ``Trigger.AvailableNow``; its
-throughput is the workload's ``rows_per_s``.
+Leg 2 drains a pre-written backlog with ``Trigger.AvailableNow``, through
+both queries, ``DRAINS`` times from fresh checkpoints.
+
+The compared figure is the median work CPU of a drain per backlog row: a
+drain is the same work every time, while the open leg's CPU depends on
+how many triggers its catch-up spans. Latency and drain throughput are
+walls and go to the report line.
 
 Both legs' running features are checked against the batch
 ``StepHistorical`` MEAN/MAX/COUNT over the same rows: exact for count and
@@ -33,12 +38,14 @@ SLOTS = 400
 TURNS = 8
 ROWS_PER_FILE = 200
 #: open-loop rate, files per second (ROWS_PER_FILE rows each)
-FILES_PER_S = 5.0
+FILES_PER_S = 2.5
 #: event time advances this much per file, so a conversation's turns sit
 #: 25 minutes apart (one session) and closed sessions pass the 1 h
 #: watermark within seconds of wall time
 EVENT_S_PER_FILE = 600
 BACKLOG_FILES = 20
+#: measured drains of the backlog; the compared figure is their median
+DRAINS = 3
 WARMUP_FILES = 4
 #: the open leg's trigger interval; the default back-to-back trigger lets
 #: the idle timeout's no-data batches delay data batches at random
@@ -99,6 +106,8 @@ class Generator(threading.Thread):
         self.start_t = None
         self.written = 0
         self.lag_s: list[float] = []
+        #: this thread's own CPU, which is the benchmark's, not the program's
+        self.cpu_s = 0.0
         self.error = None
 
     def due(self, i: int) -> float:
@@ -114,7 +123,9 @@ class Generator(threading.Thread):
                 wait = due - time.time()
                 if wait > 0:
                     time.sleep(wait)
+                c0 = time.thread_time()
                 write_file(self.seed, i, self.dir, due, self.staging)
+                self.cpu_s += time.thread_time() - c0
                 self.lag_s.append(max(0.0, time.time() - due))
                 i += 1
                 self.written = i
@@ -225,16 +236,16 @@ class StreamFeatures:
              else w.trigger(processingTime=f"{TRIGGER_S} seconds"))
         return w.start()
 
-    def _start_sessions(self, directory: str, tag: str):
+    def _start_sessions(self, directory: str, tag: str, available_now=False):
         from recipys_spark.streaming.session import streaming_session_stats
 
-        return (
+        w = (
             streaming_session_stats(self._stream(directory))
             .writeStream.format("noop")
             .outputMode("append")
             .option("checkpointLocation", self.run.path("ckpt", f"{tag}-sessions"))
-            .start()
         )
+        return (w.trigger(availableNow=True) if available_now else w).start()
 
     def _collector(self):
         """foreachBatch sink keeping every emitted row and its emission
@@ -250,21 +261,43 @@ class StreamFeatures:
         return frames, sink
 
     def _drain(self, tag: str, directory: str, files: int):
-        frames, sink = self._collector()
-        t0 = time.perf_counter()
-        q = self._start_features(self.run.path(directory), tag, sink,
-                                 available_now=True)
-        # with the idle timeout armed, AvailableNow keeps running no-data
-        # batches for the processing-time timeouts and never terminates on
-        # its own (nor does processAllAvailable return): wait until every
-        # backlog row was emitted, then stop
+        """Both queries over ``directory`` with ``Trigger.AvailableNow``.
+        Returns the emitted rows, the features query's wall, its progress
+        and the work CPU of the two queries.
+
+        With the idle timeout armed, no-data batches for the
+        processing-time timeouts would keep AvailableNow from ever
+        terminating (nor would processAllAvailable return), and stopping
+        it cancels one of them at a random point, killing Python workers.
+        The drain therefore runs with no-data batches off, so it ends on
+        its own after the backlog: the same work every time."""
+        conf = self.spark.conf
+        conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        try:
+            frames, sink = self._collector()
+            t0 = time.perf_counter()
+            cpu0 = self.run.cpu.read()[0]
+            q = self._start_features(self.run.path(directory), tag, sink,
+                                     available_now=True)
+            _await(lambda: not q.isActive, [q])
+            wall = time.perf_counter() - t0
+            features_cpu = self.run.cpu.read()[0] - cpu0
+            s0 = self.run.cpu.read()[0]
+            sq = self._start_sessions(self.run.path(directory), tag,
+                                      available_now=True)
+            _await(lambda: not sq.isActive, [sq])
+            sessions_cpu = self.run.cpu.read()[0] - s0
+        finally:
+            conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
+        for query in (q, sq):
+            if query.exception() is not None:
+                raise RuntimeError(str(query.exception()))
         rows = files * ROWS_PER_FILE
-        _await(lambda: _rows(frames) >= rows, [q])
-        wall = time.perf_counter() - t0
+        if _rows(frames) != rows:
+            raise RuntimeError(f"drain emitted {_rows(frames)} of {rows} rows")
         # progress events reach the listener asynchronously
-        _await(lambda: self.log.rows_in(q) >= rows, [q])
-        q.stop()
-        return frames, wall, self.log.of(q)
+        _await(lambda: self.log.rows_in(q) >= rows, [])
+        return frames, wall, self.log.of(q), (features_cpu, sessions_cpu)
 
     # -- measurement ---------------------------------------------------------
 
@@ -276,6 +309,7 @@ class StreamFeatures:
         mark = run.acct.mark() if run.trace else None
         run.tracer.enabled = run.trace
         t_legs = time.perf_counter()
+        open_cpu0 = run.cpu.read()[0]
         # the open loop runs for the measured seconds but at least two
         # trigger intervals; the drain leg and the catch-up come on top
         open_s = max(seconds, 2 * TRIGGER_S)
@@ -301,17 +335,29 @@ class StreamFeatures:
             sq.stop()
             live_progress, sess_progress = self.log.of(fq), self.log.of(sq)
         live = pd.concat(frames, ignore_index=True) if frames else pd.DataFrame()
+        open_cpu_s = run.cpu.read()[0] - open_cpu0 - gen.cpu_s
+        drains = []
         with run.tracer.span("stream.drain_leg"):
-            drain_frames, drain_s, drain_progress = self._drain(
-                "drain", "backlog", self.backlog
-            )
+            for i in range(DRAINS):
+                d_frames, d_wall, d_progress, d_cpu = self._drain(
+                    f"drain{i}", "backlog", self.backlog
+                )
+                drains.append({
+                    "rows": pd.concat(d_frames, ignore_index=True),
+                    "wall_s": d_wall, "progress": d_progress,
+                    "cpu_s": sum(d_cpu), "features_cpu_s": d_cpu[0],
+                })
         self.spark.streams.removeListener(self.log)
         legs_s = time.perf_counter() - t_legs
         run.tracer.enabled = False
-        drain = pd.concat(drain_frames, ignore_index=True)
+        drain = drains[0]["rows"]
+        drain_s = harness.median(d["wall_s"] for d in drains)
+        drain_progress = drains[0]["progress"]
 
         bad = self._check(pd.concat([live, drain], ignore_index=True),
                           [run.path("live"), run.path("backlog")])
+        # every later drain must emit what the first one did
+        bad += sum(self._same(d["rows"], drain) for d in drains[1:])
         failed += bad > 0
 
         # a row's sequence index fixes its file, hence the due time stamped
@@ -323,14 +369,11 @@ class StreamFeatures:
         ]
         pct, tail = harness.tail_percentile(lat_ms)
         drain_rows = len(drain)
-        batches = len(frames) + len(drain_frames)
         m = Measurement(
-            attempted=batches,
+            attempted=1 + DRAINS,
             failed=failed,
-            e2e={
-                "rows_per_s": drain_rows / drain_s,
-                "latency_p50_ms": harness.median(lat_ms),
-            },
+            e2e={"cpu_us_per_row": 1e6 * harness.median(
+                d["cpu_s"] for d in drains) / drain_rows},
             check_failures=failed,
         )
         m.report = {
@@ -339,7 +382,11 @@ class StreamFeatures:
             "stream_latency_tail_percentile": pct,
             "stream_latency_samples": len(lat_ms),
             "stream_rows_per_s": drain_rows / drain_s,
-            "drain_s": drain_s,
+            "drain_s": [d["wall_s"] for d in drains],
+            "drain_cpu_s": [d["cpu_s"] for d in drains],
+            "drain_features_cpu_s": [d["features_cpu_s"] for d in drains],
+            "open_leg_cpu_us_per_row": 1e6 * open_cpu_s / max(1, len(live)),
+            "legs_s": legs_s,
             "live_rows": len(live),
             "live_files": gen.written,
             "check_mismatches_stream": bad,
@@ -395,6 +442,15 @@ class StreamFeatures:
             "streaming.gen_lag_ms": 1000.0 * max(gen.lag_s, default=0.0),
         }
 
+    def _same(self, got, ref) -> int:
+        from harness import mismatches
+
+        con = self.run.con
+        con.register("st_drain_got", got[_CHECK_COLS])
+        con.register("st_drain_ref", ref[_CHECK_COLS])
+        return mismatches(con, "st_drain_got", "st_drain_ref",
+                          ["conv_id", "turn_idx"], float_cols=("value_mean",))
+
     def _check(self, got, directories: list) -> int:
         """Emitted running features of both legs against batch
         StepHistorical over the rows the legs read (their conversations
@@ -411,12 +467,15 @@ class StreamFeatures:
                      sequences="turn_idx")
         for fun in (Accumulator.MEAN, Accumulator.MAX, Accumulator.COUNT):
             rec.add_step(StepHistorical(sel=all_of(["value"]), fun=fun))
-        cols = ["conv_id", "turn_idx", "value_mean", "value_max", "value_count"]
+        cols = _CHECK_COLS
         con = self.run.con
         con.register("st_ref", rec.prep().select(*cols).toPandas())
         con.register("st_got", got[cols])
         return mismatches(con, "st_got", "st_ref", ["conv_id", "turn_idx"],
                           float_cols=("value_mean",))
+
+
+_CHECK_COLS = ["conv_id", "turn_idx", "value_mean", "value_max", "value_count"]
 
 
 def _rows(frames: list) -> int:

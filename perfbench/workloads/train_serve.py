@@ -123,10 +123,12 @@ class TrainServe(ClosedLoop):
             / 10.0,
         )
         held_out = F.pmod(F.xxhash64("conv_id", F.lit(seed + 3)), F.lit(5)) == 0
-        # one job writes both sides of the split, one the side table
+        # one job writes both sides of the split; the side table is drawn
+        # from what it wrote rather than generating the transcripts again
         tr.withColumn("held_out", held_out).write.mode("overwrite").partitionBy(
             "held_out"
         ).parquet(self.run.path("split"))
+        tr = self.spark.read.parquet(self.run.path("split"))
         h = F.xxhash64("conv_id", "turn_idx", F.lit(seed + 7))
         tr.where(F.pmod(h, F.lit(4)) == 0).select(
             "conv_id",
