@@ -15,9 +15,10 @@ the expanding aggregate splits into:
            small side — and merge prefix ⊕ intra-bucket running state
            with null-safe combine rules.
 
-MEDIAN is not decomposable; StepHistorical falls back to the plain
-window for it (the applyInPandas expanding-median path is the skew
-escape hatch there).
+MEDIAN is not decomposable, so StepHistorical rejects a
+``skew_bucket_size`` for it. Its one plan (repartition, sort, one
+streaming mapInArrow pass) holds only the open group's values at a
+time, so memory scales with the largest group, not the partition.
 
 When to salt (measured, see BENCH.md): the salted plan costs extra
 shuffles and forfeits cross-step window fusion, so it LOSES below

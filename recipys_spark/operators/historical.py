@@ -19,11 +19,13 @@ expanding row frame — all steps in a recipe reuse the identical
 fuses them into a single shuffle + sort. For conversations long enough
 to break a single window task, ``skew_bucket_size`` switches the
 decomposable accumulators (MAX/MIN/MEAN/COUNT/VAR) to a salted
-two-phase plan (see functions/skew.py). MEDIAN is not decomposable:
-its default plan is the streaming Arrow applyInPandas path (the window
-``percentile`` recomputes the expanding frame per row — O(n²) per
-conversation; opt back in with ``median_via_pandas=False`` only for
-the SQL-mirror comparison).
+two-phase plan (see functions/skew.py). MEDIAN is not decomposable and
+has one plan of its own: repartition by the groups, sort within
+partitions by (groups, sequence), then one streaming ``mapInArrow``
+pass that appends the medians to the full rows. The window
+``percentile`` in ``historical_expr`` recomputes the expanding frame per
+row — O(n²) per conversation — so it serves only as the SQL mirror
+that tests compare against.
 """
 
 from __future__ import annotations
@@ -210,34 +212,22 @@ class StepHistorical(Step):
         suffix: Optional[str] = None,
         role: str = "predictor",
         skew_bucket_size: Optional[int] = None,
-        median_via_pandas: Optional[bool] = None,
-        median_ship: Optional[str] = None,
     ) -> None:
         super().__init__(sel if sel is not None else all_numeric_predictors())
         if not isinstance(fun, Accumulator):
             raise TypeError(f"Expected Accumulator enum for function, got {type(fun)}")
         if fun in (Accumulator.FIRST, Accumulator.LAST):
             raise TypeError(f"FIRST/LAST are resampling-only policies, got {fun}")
-        if median_via_pandas and fun is not Accumulator.MEDIAN:
-            raise ValueError("median_via_pandas applies only to MEDIAN")
-        if median_ship is not None:
-            if fun is not Accumulator.MEDIAN:
-                raise ValueError("median_ship applies only to MEDIAN")
-            if median_ship not in ("auto", "narrow", "full"):
-                raise ValueError("median_ship must be 'auto', 'narrow' or 'full'")
-            if median_via_pandas is False:
-                raise ValueError(
-                    "median_ship configures the Arrow median paths, but "
-                    "median_via_pandas=False forces the window-percentile "
-                    "expression — the requested ship strategy would be "
-                    "silently ignored; drop one of the two options"
-                )
-        self.median_ship = median_ship or "auto"
+        if skew_bucket_size is not None and fun is Accumulator.MEDIAN:
+            raise ValueError(
+                "skew_bucket_size does not apply to MEDIAN: the median is not "
+                "decomposable into salted buckets, and its streaming plan "
+                "already holds only one group's values at a time"
+            )
         self.fun = fun
         self.suffix = suffix if suffix is not None else fun.value
         self.role = role
         self.skew_bucket_size = skew_bucket_size
-        self.median_via_pandas = median_via_pandas
         self.desc = f"Create historical {fun}"
 
     def new_column_roles(self) -> dict[str, str]:
@@ -251,7 +241,9 @@ class StepHistorical(Step):
             raise ValueError(
                 "StepHistorical requires a sequence role column for deterministic ordering."
             )
-        if self.skew_bucket_size and self.fun is not Accumulator.MEDIAN:
+        if self.fun is Accumulator.MEDIAN:
+            return self._expanding_median(df, groups, seq)
+        if self.skew_bucket_size:
             from recipys_spark.functions.skew import salted_expanding
 
             return salted_expanding(
@@ -263,16 +255,6 @@ class StepHistorical(Step):
                 suffix=self.suffix,
                 bucket_size=self.skew_bucket_size,
             )
-        if self.fun is Accumulator.MEDIAN and self.median_via_pandas is not False:
-            # Scale-safe default: the window `percentile` recomputes the
-            # expanding frame per row — O(n²) per conversation, which
-            # never finishes at 10^6+ turns. The Arrow paths stream it
-            # (pandas skiplist expanding median, O(n log n)). Pass
-            # median_via_pandas=False to force the window expression
-            # (the SQL-oracle mirror).
-            if self._median_ship_full(df, groups, seq):
-                return self._median_apply_in_arrow(df, groups, seq)
-            return self._median_apply_in_pandas(df, groups, seq)
         frame = expanding(groups, seq)
         exprs = [
             historical_expr(c, self.fun, frame).alias(f"{c}_{self.suffix}")
@@ -280,218 +262,108 @@ class StepHistorical(Step):
         ]
         return df.select("*", *exprs)
 
-    def _median_batched(self, df, groups, seq_cols, cols, out_schema):
-        """Partition-batched exact expanding median: hash-repartition by
-        the group columns (all rows of a group land in one partition —
-        the same exchange groupBy/applyInArrow would pay), then ONE
-        ``mapInArrow`` call per partition instead of one Python call
-        per group. With ~67-row groups the per-group dispatch (Arrow
-        IPC framing + function call + schema checks) dominated the
-        Arrow median path; batching runs one pyarrow sort and, per
-        value column, one C-level grouped expanding median
-        (``Series.groupby(gids).expanding().median()`` — a single
-        cython pass over the whole partition) for all groups at once.
+    def _expanding_median(self, df, groups, seq):
+        """Exact expanding median in one streaming pass over sorted rows.
 
-        Exactness: the partition table is sorted by (groups, sequence)
-        with ``null_placement="at_start"`` — the same asc_nulls_first
-        order as the window mirror — and group ids come from null-safe
-        (and NaN-safe, matching Spark's groupBy NaN normalization)
-        boundary comparisons on the ARROW side, so group keys never
-        round-trip through pandas (no int64→float64 coercion above
-        2^53). Only the selected value columns are materialized as
-        pandas Series, exactly like the per-group path. Per-group
-        order, NaN→NULL normalization and the skiplist expanding
-        median are unchanged, so results are bit-identical
-        (parity-pinned against the window-percentile mirror)."""
+        The JVM groups and orders: hash-repartition by the group columns
+        (one partition when there are none), then sort each partition by
+        (groups, sequence). That is Spark's own ordering — NULL first,
+        NaN last — so every row sees the same history as in the
+        window-percentile mirror (``historical_expr``). One
+        ``mapInArrow`` call per partition then appends the median
+        columns to the full rows in place; with no join-back, rows with
+        NULL or duplicate (group, sequence) keys stay one-to-one.
+
+        Group boundaries are found Arrow-side, with NULL == NULL and
+        NaN == NaN as in Spark's grouping, and each batch's first row is
+        compared with the previous batch's last key, so a group may
+        span batches. Per value column one pandas
+        ``groupby(gids).expanding().median()`` (a C skiplist pass, NULL
+        and NaN values skipped) runs per batch, with the still-open
+        group's carried values prepended. Only that open group's sorted
+        non-null values are carried, so memory is O(batch + largest
+        group), not O(partition)."""
         import numpy as np
+        import pandas as pd
         import pyarrow as pa
         import pyarrow.compute as pc
         from pyspark.sql import types as T
 
-        suffix = self.suffix
-        sort_keys = [(c, "ascending") for c in list(groups) + list(seq_cols)]
+        cols, suffix = list(self.columns), self.suffix
         float_groups = {
             f.name
             for f in df.schema
             if f.name in groups and isinstance(f.dataType, (T.FloatType, T.DoubleType))
         }
-
-        def per_partition(batches):
-            batches = [b for b in batches if b.num_rows]
-            if not batches:
-                return
-            tbl = pa.Table.from_batches(batches)
-            tbl = tbl.sort_by(sort_keys, null_placement="at_start")
-            n = tbl.num_rows
-            change = np.zeros(n, dtype=bool)
-            for g in groups:
-                col = tbl.column(g).combine_chunks()
-                a, b = col.slice(1), col.slice(0, n - 1)
-                eq = pc.fill_null(pc.equal(a, b), False)
-                both_null = pc.and_(pc.is_null(a), pc.is_null(b))
-                same = pc.or_(eq, both_null)
-                if g in float_groups:
-                    # Spark groups NaN keys together; Arrow NaN != NaN
-                    both_nan = pc.and_(
-                        pc.fill_null(pc.is_nan(a), False),
-                        pc.fill_null(pc.is_nan(b), False),
-                    )
-                    same = pc.or_(same, both_nan)
-                change[1:] |= np.invert(same.to_numpy(zero_copy_only=False))
-            gids = np.cumsum(change)
-            for c in cols:
-                s = tbl.column(c).to_pandas()
-                med = s.groupby(gids).expanding().median().to_numpy()
-                # NaN (empty expanding window) → Arrow NULL, matching
-                # the window-percentile path and the SQL oracles
-                arr = pa.array(med, type=pa.float64(), mask=np.isnan(med))
-                tbl = tbl.append_column(f"{c}_{suffix}", arr)
-            yield from tbl.to_batches()
-
-        return df.repartition(*groups).mapInArrow(per_partition, schema=out_schema)
-
-    def _median_apply_in_pandas(self, df, groups, seq):
-        """Exact expanding median via Arrow-batched applyInPandas
-        (SURVEY.md §7 hard parts): the window ``percentile`` recomputes
-        the frame per row (quadratic for long conversations); pandas
-        expanding().median() streams it.
-
-        Only (groups, sequence, selected columns) ride the Arrow
-        round-trip — shipping the full row (e.g. the transcript `text`
-        column) through Python would multiply the shuffle+serialize
-        volume by the table width for no reason; the medians join back
-        on (groups, sequence), which the engine already requires to be
-        a unique, deterministic ordering key (SURVEY.md §7)."""
-        from pyspark.sql import types as T
-
-        cols, suffix = list(self.columns), self.suffix
-        seq_cols = list(seq)
-        key_cols = list(groups) + seq_cols
-        narrow = df.select(*key_cols, *[c for c in cols if c not in key_cols])
-        out_schema = T.StructType(
-            [narrow.schema[c] for c in key_cols]
-            + [T.StructField(f"{c}_{suffix}", T.DoubleType()) for c in cols]
-        )
-
-        def per_group(pdf):
-            # na_position="first" mirrors Spark's asc_nulls_first window
-            # ordering, so NULL sequence keys see the same expanding
-            # history on both median paths
-            pdf = pdf.sort_values(seq_cols, na_position="first")
-            res = pdf[key_cols].copy()
-            for c in cols:
-                res[f"{c}_{suffix}"] = pdf[c].expanding().median()
-            return res
-
-        if groups:
-            # partition-batched path: one Python call per partition
-            # (see _median_batched); NaN→NULL happens via the Arrow
-            # validity mask inside the helper
-            batched_schema = T.StructType(
-                list(narrow.schema)
-                + [T.StructField(f"{c}_{suffix}", T.DoubleType()) for c in cols]
-            )
-            meds = self._median_batched(
-                narrow, groups, seq_cols, cols, batched_schema
-            ).select(*key_cols, *[f"{c}_{suffix}" for c in cols])
-        else:
-            # a global (ungrouped) expanding median is a single group —
-            # per-group dispatch overhead is irrelevant, keep applyInPandas
-            meds = narrow.groupBy(*groups).applyInPandas(
-                per_group, schema=out_schema
-            )
-            # pandas emits NaN (not NULL) when the expanding window holds
-            # no non-null values; the window-percentile path and SQL
-            # oracles emit NULL — normalize so both paths are
-            # value-identical.
-            fixed = [
-                F.when(
-                    ~F.isnan(F.col(f"{c}_{suffix}")), F.col(f"{c}_{suffix}")
-                ).alias(f"{c}_{suffix}")
-                for c in cols
-            ]
-            meds = meds.select(*key_cols, *fixed)
-        # Null-safe join-back: Spark's groupBy/applyInPandas treats NULL
-        # group/sequence keys as their own group, so the Arrow path
-        # computes their medians too — a plain equi-join (NULL != NULL)
-        # would silently drop those rows, diverging from the
-        # window-percentile mirror which keeps them. (groups, sequence)
-        # is the engine's required-unique ordering key, so the inner
-        # null-safe join is exactly row-preserving.
-        cond = None
-        for kc in key_cols:
-            eq = df[kc].eqNullSafe(meds[kc])
-            cond = eq if cond is None else cond & eq
-        return df.join(meds, cond, "inner").select(
-            *[df[c] for c in df.columns],
-            *[meds[f"{c}_{suffix}"] for c in cols],
-        )
-
-    def _median_ship_full(self, df, groups, seq) -> bool:
-        """Ship-strategy policy for the Arrow median.
-
-        ``full`` ships whole rows once through applyInArrow and appends
-        the medians in place — ONE shuffle, no join-back (measured ~2×
-        on the bench events table). ``narrow`` ships only (groups,
-        sequence, selected cols) and joins the medians back — two extra
-        exchanges, but the right trade when the row carries wide
-        variable-width payloads (a transcript ``text`` column would
-        multiply the Arrow+shuffle volume for no reason). ``auto``
-        picks ``full`` iff every passthrough column is a fixed-width
-        primitive (numeric/bool/timestamp/date) — variable-width
-        passthrough (string/binary/array/map/struct) routes narrow."""
-        if self.median_ship != "auto":
-            return self.median_ship == "full"
-        from pyspark.sql import types as T
-
-        fixed = (
-            T.NumericType, T.BooleanType, T.TimestampType,
-            T.TimestampNTZType, T.DateType,
-        )
-        shipped = set(groups) | set(seq) | set(self.columns)
-        return all(
-            isinstance(f.dataType, fixed)
-            for f in df.schema
-            if f.name not in shipped
-        )
-
-    def _median_apply_in_arrow(self, df, groups, seq):
-        """Full-row expanding median: one applyInArrow pass appends the
-        median columns to the rows in place — no join-back stage.
-
-        applyInArrow (not applyInPandas) on purpose: passthrough
-        columns stay zero-copy Arrow and never round-trip through
-        pandas, which would coerce nullable int64 to float64 and
-        corrupt values above 2^53. Only the selected value columns are
-        materialized as pandas Series (for the O(n log n) skiplist
-        expanding median); the sort mirrors the window path's
-        asc_nulls_first ordering."""
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        cols, suffix = list(self.columns), self.suffix
-        seq_cols = list(seq)
         out_schema = T.StructType(
             list(df.schema)
             + [T.StructField(f"{c}_{suffix}", T.DoubleType()) for c in cols]
         )
+        names = out_schema.names
 
-        if groups:
-            # partition-batched path: one Python call per partition
-            # instead of one per group (see _median_batched)
-            return self._median_batched(df, groups, seq_cols, cols, out_schema)
-
-        def per_group(tbl: "pa.Table") -> "pa.Table":
-            tbl = tbl.sort_by(
-                [(c, "ascending") for c in seq_cols], null_placement="at_start"
+        def key_changes(col, is_float):
+            """True where col[i + 1] starts a new group after col[i]."""
+            a, b = col.slice(1), col.slice(0, len(col) - 1)
+            same = pc.or_(
+                pc.fill_null(pc.equal(a, b), False),
+                pc.and_(pc.is_null(a), pc.is_null(b)),
             )
-            for c in cols:
-                med = tbl[c].to_pandas().expanding().median().to_numpy()
-                # NaN (empty expanding window) → Arrow NULL, matching
-                # the window-percentile path and the SQL oracles
-                arr = pa.array(med, type=pa.float64(), mask=np.isnan(med))
-                tbl = tbl.append_column(f"{c}_{suffix}", arr)
-            return tbl
+            if is_float:
+                # Spark groups NaN keys together; Arrow NaN != NaN
+                both_nan = pc.and_(pc.is_nan(a), pc.is_nan(b))
+                same = pc.or_(same, pc.fill_null(both_nan, False))
+            return np.invert(same.to_numpy(zero_copy_only=False))
 
-        return df.groupBy(*groups).applyInArrow(per_group, schema=out_schema)
+        def per_partition(batches):
+            last_key = None  # previous batch's last row, per group column
+            held = {c: np.empty(0) for c in cols}  # open group's sorted non-nulls
+            for batch in batches:
+                n = batch.num_rows
+                if not n:
+                    continue
+                first = last_key is None
+                starts = np.zeros(n, dtype=bool)
+                starts[0] = first
+                for g in groups:
+                    col = batch.column(g)
+                    if not first:
+                        col = pa.concat_arrays([last_key[g], col])
+                    starts[int(first):] |= key_changes(col, g in float_groups)
+                gids = np.cumsum(starts)
+                new = np.flatnonzero(starts)
+                m = new[0] if len(new) else n  # rows that continue the open group
+                meds = []
+                for c in cols:
+                    vals = pc.cast(batch.column(c), pa.float64(), safe=False)
+                    vals = vals.to_numpy(zero_copy_only=False)
+                    k = len(held[c])
+                    # The next m rows' medians lie within the middle
+                    # 2m + 2 carried values: dropping equally many from
+                    # each end keeps the middle ranks on the same
+                    # elements, and keeps a long group O(n log n) rather
+                    # than re-running its whole history every batch.
+                    lo = max(0, (k - 1) // 2 - m)
+                    pre = held[c][lo : k - lo] if m else held[c][:0]
+                    med = (
+                        pd.Series(np.concatenate([pre, vals]))
+                        .groupby(np.concatenate([np.zeros(len(pre), gids.dtype), gids]))
+                        .expanding()
+                        .median()
+                        .to_numpy()[len(pre):]
+                    )
+                    # NaN (no non-null value yet) → NULL, as in the mirror
+                    meds.append(pa.array(med, type=pa.float64(), mask=np.isnan(med)))
+                    rest = vals[new[-1]:] if len(new) else vals
+                    rest = np.sort(rest[~np.isnan(rest)])
+                    held[c] = (
+                        rest
+                        if len(new)
+                        else np.insert(held[c], np.searchsorted(held[c], rest), rest)
+                    )
+                last_key = {g: batch.column(g).slice(n - 1, 1) for g in groups}
+                yield pa.RecordBatch.from_arrays([*batch.columns, *meds], names=names)
+
+        rows = df.repartition(*groups) if groups else df.repartition(1)
+        return rows.sortWithinPartitions(*groups, *seq).mapInArrow(
+            per_partition, schema=out_schema
+        )

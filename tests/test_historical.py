@@ -3,12 +3,13 @@ tests/test_steps.py:127–154 re-expressed; oracle = the reference's own
 pandas-backend semantics: groupby(id).expanding() with skipna)."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from recipys_spark import Accumulator, Recipe
+from recipys_spark.functions.windows import expanding
 from recipys_spark.operators import StepHistorical
+from recipys_spark.operators.historical import historical_expr
 from recipys_spark.selector import all_numeric_predictors, all_of
 
 from tests.conftest import collect_sorted, make_example_pdf
@@ -74,6 +75,8 @@ def test_historical_rejects_first_last():
         StepHistorical(fun=Accumulator.LAST)
     with pytest.raises(TypeError):
         StepHistorical(fun="max")
+    with pytest.raises(ValueError, match="skew_bucket_size"):
+        StepHistorical(fun=Accumulator.MEDIAN, skew_bucket_size=1000)
 
 
 def test_historical_suffix_stable_across_prep_bake(spark, example_recipe):
@@ -120,18 +123,29 @@ def test_rolling_matches_pandas(spark):
     )
 
 
-def test_median_via_pandas_equals_window(spark):
-    """The applyInPandas exact-median escape hatch equals the window
-    percentile path (SURVEY §7 hard parts)."""
+def median_mirror(sdf, cols, groups, seq):
+    """The window-percentile expression (the SQL-oracle mirror) for
+    every column in ``cols``, appended to ``sdf``."""
+    frame = expanding(groups, seq)
+    return sdf.select(
+        "*",
+        *[
+            historical_expr(c, Accumulator.MEDIAN, frame).alias(f"{c}_median")
+            for c in cols
+        ],
+    )
+
+
+def test_median_equals_window(spark):
+    """The streaming exact median equals the window percentile path
+    (SURVEY §7 hard parts)."""
     pdf = make_example_pdf(nan_x1=True)
-    def run(**kw):
-        rec = Recipe(
-            spark.createDataFrame(pdf),
-            outcomes="y", predictors=["x1", "x2"], groups="id", sequences="time",
-        ).add_step(StepHistorical(sel=all_numeric_predictors(), fun=Accumulator.MEDIAN, **kw))
-        return collect_sorted(rec.prep())
-    a = run(median_via_pandas=False)  # window percentile (oracle mirror)
-    b = run()  # default: scale-safe applyInPandas streaming median
+    sdf = spark.createDataFrame(pdf)
+    rec = Recipe(
+        sdf, outcomes="y", predictors=["x1", "x2"], groups="id", sequences="time",
+    ).add_step(StepHistorical(sel=all_numeric_predictors(), fun=Accumulator.MEDIAN))
+    a = collect_sorted(median_mirror(sdf, ["x1", "x2"], ["id"], ["time"]))
+    b = collect_sorted(rec.prep())
     for c in ["x1_median", "x2_median"]:
         np.testing.assert_allclose(
             a[c].to_numpy(dtype=float), b[c].to_numpy(dtype=float), equal_nan=True
@@ -139,8 +153,8 @@ def test_median_via_pandas_equals_window(spark):
 
 
 def test_median_long_conversation_bounded_time(spark):
-    """Scale guard: the default MEDIAN plan must be the streaming
-    applyInPandas path, not the O(n²) window percentile — a 200k-turn
+    """Scale guard: the MEDIAN plan must be the streaming mapInArrow
+    pass, not the O(n²) window percentile — a 200k-turn
     single conversation completes in seconds (the quadratic plan would
     take hours)."""
     import time
@@ -167,132 +181,138 @@ def test_median_long_conversation_bounded_time(spark):
     np.testing.assert_allclose(got[0]["x1_median"], exp)
 
 
-def test_median_null_keys_survive_both_paths(spark):
-    """Rows with NULL group or sequence keys must survive the Arrow
-    median join-back (null-safe join) and match the window-percentile
-    mirror, which keeps them via NULL window partitions/ordering."""
-    import pandas as pd
+NAN = float("nan")
+MEDIAN_KEY_CASES = {
+    # NULL group and sequence keys keep their rows
+    "null_keys": (
+        [(1, 0.0, 10.0, "a"), (1, 1.0, 20.0, "b"), (None, 0.0, 5.0, "c"),
+         (None, 1.0, 7.0, "d"), (2, 0.0, 1.0, "e"), (2, None, 3.0, "f")],
+        ["id"],
+    ),
+    # a duplicate (group, sequence) key: 3 rows in, 3 rows out (the
+    # twin rows are identical, so any tie order gives the same rows)
+    "duplicate_key": (
+        [(1, 0.0, 10.0, "a"), (1, 1.0, 20.0, "b"), (1, 1.0, 20.0, "b")],
+        ["id"],
+    ),
+    # Spark orders NULL first and NaN last; both keys occur once
+    "nan_null_seq_grouped": (
+        [(1, None, 4.0, "a"), (1, 0.0, 10.0, "b"), (1, NAN, 100.0, "c"),
+         (1, 1.0, 1.0, "d"), (2, 2.0, 5.0, "e"), (2, 3.0, None, "f"),
+         (None, 4.0, 7.0, "g")],
+        ["id"],
+    ),
+    "nan_null_seq_ungrouped": (
+        [(1, None, 4.0, "a"), (1, 0.0, 10.0, "b"), (1, NAN, 100.0, "c"),
+         (1, 1.0, 1.0, "d"), (2, 2.0, 5.0, "e"), (2, 3.0, None, "f"),
+         (None, 4.0, 7.0, "g")],
+        [],
+    ),
+}
 
-    pdf = pd.DataFrame(
-        {
-            "id": [1.0, 1.0, None, None, 2.0, 2.0],
-            "time": [0.0, 1.0, 0.0, 1.0, 0.0, None],
-            "x1": [10.0, 20.0, 5.0, 7.0, 1.0, 3.0],
-        }
+
+def _nan_tag(v):
+    return "NaN" if isinstance(v, float) and np.isnan(v) else v
+
+
+def _sorted_rows(df):
+    """Collected rows in a total order, NULL < numbers < NaN, with NaN
+    and NULL kept apart (``toPandas`` would fold both into NaN)."""
+
+    def key(v):
+        v = _nan_tag(v)
+        return (0, 0) if v is None else (2, 0) if v == "NaN" else (1, v)
+
+    return sorted(
+        (tuple(r) for r in df.collect()), key=lambda r: tuple(map(key, r))
     )
-    sdf = spark.createDataFrame(pdf)
 
-    def run(**kw):
-        rec = Recipe(
-            sdf, predictors=["x1"], groups="id", sequences="time"
-        ).add_step(
-            StepHistorical(
-                sel=all_numeric_predictors(), fun=Accumulator.MEDIAN, **kw
-            )
-        )
-        return (
-            rec.prep()
-            .toPandas()
-            .sort_values(["id", "time"], na_position="first")
-            .reset_index(drop=True)
-        )
 
-    a = run(median_via_pandas=False)
-    b = run()
-    assert len(a) == len(pdf) and len(b) == len(pdf)
+def assert_median_rows_equal(got, exp):
+    """Same rows as multisets; the last column (the median) to float
+    tolerance, every other column exactly."""
+    got, exp = _sorted_rows(got), _sorted_rows(exp)
+    assert len(got) == len(exp), (got, exp)
+    for g, e in zip(got, exp):
+        assert list(map(_nan_tag, g[:-1])) == list(map(_nan_tag, e[:-1])), (g, e)
     np.testing.assert_allclose(
-        a["x1_median"].to_numpy(dtype=float),
-        b["x1_median"].to_numpy(dtype=float),
+        np.array([r[-1] for r in got], dtype=float),
+        np.array([r[-1] for r in exp], dtype=float),
         equal_nan=True,
     )
 
 
-def test_median_ship_paths_identical(spark, example_df_nan):
-    """full-row applyInArrow ≡ narrow+join applyInPandas ≡ window
-    percentile expression, including NULL normalization and NULL
-    sequence keys; and the auto policy routes by passthrough width."""
-    from pyspark.sql import functions as F
+@pytest.mark.parametrize("case", sorted(MEDIAN_KEY_CASES))
+def test_median_null_keys_survive_both_paths(spark, case):
+    """NULL, NaN and duplicate (group, sequence) keys: the median keeps
+    every row one-to-one and matches the window-percentile mirror, which
+    orders NULL first and NaN last. Frames come from Python rows with an
+    explicit schema because ``createDataFrame(pandas)`` turns NaN into
+    NULL; the string column ``s`` rides along as a passthrough."""
+    rows, groups = MEDIAN_KEY_CASES[case]
+    sdf = spark.createDataFrame(rows, "id long, time double, x1 double, s string")
+    rec = Recipe(
+        sdf, predictors=["x1"], groups=groups or None, sequences="time"
+    ).add_step(StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN))
+    out = rec.prep()
+    assert out.count() == len(rows)
+    assert_median_rows_equal(out, median_mirror(sdf, ["x1"], groups, ["time"]))
 
-    def run(**kw):
-        rec = Recipe(
-            example_df_nan, predictors=["x1"], groups="id", sequences="time"
-        ).add_step(
-            StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN, **kw)
+
+def test_median_groups_span_arrow_batches(spark):
+    """Groups longer than one Arrow batch: the open group's values carry
+    from batch to batch, and a group boundary may fall on a batch's
+    first row. 7-row batches over ~400 rows with NULL values and NULL
+    group and sequence keys, grouped and ungrouped."""
+    n = 400
+    rows = [
+        (
+            None if i % 53 == 0 else i // 37,
+            None if i == 200 else float(i),
+            None if i % 5 == 0 else float((i * 7919) % 101),
+            "t",
         )
-        return rec.prep().orderBy("id", "time").toPandas()
-
-    full = run(median_ship="full")
-    narrow = run(median_ship="narrow")
-    window = run(median_via_pandas=False)
-    pd.testing.assert_frame_equal(full, narrow)
-    pd.testing.assert_frame_equal(full, window)
-
-    s = StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN)
-    # example frame carries string columns x3/x4 → auto ships narrow
-    assert not s._median_ship_full(example_df_nan, ["id"], ["time"])
-    numeric_only = example_df_nan.select("id", "time", "x1", "y")
-    assert s._median_ship_full(numeric_only, ["id"], ["time"])
-    with pytest.raises(ValueError, match="median_ship"):
-        StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN, median_ship="bogus")
-    with pytest.raises(ValueError, match="median_ship"):
-        StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MAX, median_ship="full")
-
-
-def test_median_ship_conflicts_with_window_path():
-    with pytest.raises(ValueError, match="median_via_pandas"):
-        StepHistorical(
-            fun=Accumulator.MEDIAN, median_ship="full", median_via_pandas=False
-        )
-
-def test_median_batched_partition_semantics(spark):
-    """The partition-batched median (one mapInArrow call per partition,
-    round 7) must group exactly like Spark's groupBy within a shared
-    partition: NaN float keys are ONE group (Arrow's NaN != NaN must
-    not split them), NULL keys are their own group, and many groups
-    per partition reproduce the window-percentile mirror."""
-    import pandas as pd
-
-    # NOTE: in a float64 pandas column None IS NaN — all three NaN-id
-    # rows form ONE group (Spark's groupBy NaN normalization); (id,
-    # time) stays unique per the engine's ordering-key requirement
-    pdf = pd.DataFrame(
-        {
-            "id": [float("nan"), float("nan"), float("nan"), 1.0, 1.0, 2.0, 2.0, 3.0],
-            "time": [0.0, 1.0, 2.0, 0.0, 1.0, 0.0, 1.0, 0.0],
-            "x1": [4.0, 8.0, 3.0, 10.0, 20.0, 1.0, 5.0, 7.0],
-        }
-    )
-    # coalesce(1): every group shares one partition, exercising the
-    # in-partition boundary detection rather than one-group-per-task
-    sdf = spark.createDataFrame(pdf).coalesce(1)
-
-    def run(**kw):
-        rec = Recipe(
-            sdf, predictors=["x1"], groups="id", sequences="time"
-        ).add_step(
-            StepHistorical(
-                sel=all_numeric_predictors(), fun=Accumulator.MEDIAN, **kw
+        for i in range(n)
+    ]
+    sdf = spark.createDataFrame(rows, "id long, time double, x1 double, s string")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        for groups in (["id"], []):
+            rec = Recipe(
+                sdf, predictors=["x1"], groups=groups or None, sequences="time"
+            ).add_step(StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN))
+            assert_median_rows_equal(
+                rec.prep(), median_mirror(sdf, ["x1"], groups, ["time"])
             )
-        )
-        return (
-            rec.prep()
-            .toPandas()
-            .sort_values(["id", "time"], na_position="first")
-            .reset_index(drop=True)
-        )
+    finally:
+        spark.conf.set(conf, before)
 
-    batched = run()  # default: partition-batched Arrow path
-    window = run(median_via_pandas=False)  # SQL-oracle mirror
-    assert len(batched) == len(pdf)
-    np.testing.assert_allclose(
-        batched["x1_median"].to_numpy(dtype=float),
-        window["x1_median"].to_numpy(dtype=float),
-        equal_nan=True,
+
+def test_median_partition_semantics(spark):
+    """The per-partition median must group exactly like Spark's groupBy
+    within a shared partition: NaN float keys are ONE group (Arrow's
+    NaN != NaN must not split them), NULL keys are a group of their own,
+    and many groups per partition reproduce the window-percentile
+    mirror."""
+    # (id, time) stays unique per the engine's ordering-key requirement
+    rows = [
+        (NAN, 0.0, 4.0), (NAN, 1.0, 8.0), (NAN, 2.0, 3.0), (None, 0.0, 9.0),
+        (1.0, 0.0, 10.0), (1.0, 1.0, 20.0), (2.0, 0.0, 1.0), (2.0, 1.0, 5.0),
+        (3.0, 0.0, 7.0),
+    ]
+    sdf = spark.createDataFrame(rows, "id double, time double, x1 double")
+    rec = Recipe(sdf, predictors=["x1"], groups="id", sequences="time").add_step(
+        StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN)
     )
+    out = rec.prep()
+    assert_median_rows_equal(out, median_mirror(sdf, ["x1"], ["id"], ["time"]))
     # NaN keys grouped together: the NaN group's expanding median at
     # time=1 is median(4, 8) = 6 — it would be 8.0 if Arrow's
     # NaN != NaN split each NaN row into its own group
-    nan_rows = batched[batched["id"].isna()].sort_values("time")
-    np.testing.assert_allclose(
-        nan_rows["x1_median"].to_numpy(dtype=float), [4.0, 6.0, 4.0]
+    nan_rows = sorted(
+        (r["time"], r["x1_median"]) for r in out.collect()
+        if r["id"] is not None and np.isnan(r["id"])
     )
+    assert [m for _, m in nan_rows] == [4.0, 6.0, 4.0]

@@ -80,6 +80,23 @@ def test_predicate_pushdown_reaches_scan(spark, transcripts):
     assert re.search(r"PushedFilters: \[.*GreaterThan\(turn_idx,3\)", plan), plan
 
 
+def test_median_one_shuffle_no_join_back(spark, transcripts):
+    """The exact median ships full rows (``text`` included) through one
+    repartition and appends its columns in place: one shuffle, no
+    join back to the input."""
+    rec = Recipe(
+        transcripts,
+        predictors=["value"],
+        groups="conv_id",
+        sequences=["turn_idx", "ts"],
+    ).add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEDIAN))
+    plan = plan_of(rec.prep())
+    assert "text" in transcripts.columns
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    # no join of any kind: a small input would broadcast the join back
+    assert "Join" not in plan, plan
+
+
 def test_asof_broadcast_strategy_broadcasts(spark, transcripts):
     feats = transcripts.where("role = 'tool'").select(
         "conv_id", F.col("ts").alias("fts"), F.col("n_chars").alias("feat")
