@@ -111,13 +111,13 @@ def recommend_pipeline_config(
             df, groups, seqs[0],
             salt_above_rows=Recipe.AUTO_SKEW_ROLLING_SALT_ABOVE, stats=stats,
         )
+    from recipys_spark.operators.historical import StepRolling, takes_skew_bucket
+    from recipys_spark.operators.transcripts import StepAssembleContext
+
     for i, s in enumerate(steps):
-        capable = hasattr(s, "skew_bucket_size")
+        capable = takes_skew_bucket(s)
         bucket = None
         if capable and groups and seqs:
-            from recipys_spark.operators.historical import StepRolling
-            from recipys_spark.operators.transcripts import StepAssembleContext
-
             bounded_frame = isinstance(s, (StepRolling, StepAssembleContext))
             bucket = rolling_bucket if bounded_frame else window_bucket
         step_rows.append(

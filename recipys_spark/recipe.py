@@ -238,7 +238,8 @@ class Recipe:
         size into every skew-capable step that wasn't hand-configured
         (functions/skew.py encodes the BENCH.md measured crossovers).
 
-        Per-class policy, from the crossover measurements:
+        Per-class policy, from the crossover measurements (a MEDIAN
+        StepHistorical has no salted plan and is never assigned one):
         - expanding/fill/lag/sessionize steps: their plain plans put a
           whole group through ONE window task (O(n) state) — salt when
           the largest group exceeds ~4M rows (7.9–40× wins measured).
@@ -250,7 +251,7 @@ class Recipe:
             group_size_stats,
             recommend_skew_bucket_size,
         )
-        from recipys_spark.operators.historical import StepRolling
+        from recipys_spark.operators.historical import StepRolling, takes_skew_bucket
         from recipys_spark.selector import select_groups, select_sequence
 
         groups = select_groups(ingredients)
@@ -263,7 +264,7 @@ class Recipe:
         configurable = [
             s
             for s in self.steps
-            if hasattr(s, "skew_bucket_size")
+            if takes_skew_bucket(s)
             and (
                 s.skew_bucket_size is None
                 or getattr(s, "_auto_skew_assigned", False)

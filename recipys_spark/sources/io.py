@@ -35,9 +35,16 @@ def get_spark(
     extra_conf: Optional[dict] = None,
 ) -> SparkSession:
     """Local session with the engine's canonical config: UTC, AQE on,
-    Arrow on, shuffle partitions sized to the core count."""
+    Arrow on, shuffle partitions equal to ``parallelism`` (one per core)
+    unless ``shuffle_partitions`` is given.
+
+    One per core, not more: every task of a Python stage pays a fixed
+    worker start cost, and stateful streaming operators skip AQE, so
+    their partition count is this setting, frozen at a checkpoint's
+    first start (streaming/session.py). It is also the advisor's floor
+    (plans/advisor.py)."""
     if shuffle_partitions is None:
-        shuffle_partitions = max(parallelism, 8)
+        shuffle_partitions = parallelism
     import os as _os
 
     # AQE coalescing floor (guide §2.2): the default 1 MB floor merges

@@ -10,14 +10,32 @@ counterparts cover the live-ingest path of a transcript pipeline:
   in-order data.
 - ``streaming_running_features``: per-conversation running aggregates
   via ``applyInPandasWithState`` (GroupState) — the streaming analog of
-  the expanding-window StepHistorical for decomposable accumulators
-  (count/sum/mean/max/min carried in state, Arrow-batched).
+  the expanding-window StepHistorical MEAN/MAX/COUNT (sum, count and max
+  carried in state, Arrow-batched).
+
+Cost model of ``streaming_running_features``. Its Python cost per
+micro-batch is fixed per state partition, not per row: each partition
+runs one Python pass per batch, and a second one when
+``idle_timeout=True`` (Spark starts a separate runner to process timed-out
+state on every batch, even when no key times out). Every pass pays a
+fixed start cost in the worker, ~0.1–0.2 s of CPU on Python 3.11. The
+partition count is ``spark.sql.shuffle.partitions`` at the checkpoint's
+FIRST start and is frozen there (stateful operators skip AQE), so a
+checkpoint created under an older, larger setting keeps its partitions;
+``get_spark`` sizes it to one partition per core. Inside a pass, the
+per-conversation body is numpy over the group's arrays.
+
+Under ``Trigger.AvailableNow``, ``idle_timeout=True`` terminates only with
+``spark.sql.streaming.noDataMicroBatches.enabled=false``: the processing-
+time timeout otherwise keeps scheduling no-data batches, and neither
+``AvailableNow`` nor ``processAllAvailable`` ever finishes.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -88,9 +106,12 @@ def _running_features_impl(
     key, batches: Iterator[pd.DataFrame], state: GroupState, idle_timeout: bool
 ):
     """Expanding mean/max/count carried across micro-batches in
-    GroupState — fully vectorized pandas (no per-row Python, per the
-    input_hint mandate): prior-state (sum, count, max) combines with
-    in-batch cumulative aggregates.
+    GroupState — numpy over the group's arrays (no per-row Python, no
+    per-group pandas Series arithmetic): a stable argsort on turn_idx,
+    ``cumsum`` for count and sum, ``np.fmax.accumulate`` for the max,
+    each offset by the prior state (sum, count, max), then one output
+    frame. A NULL value gets a NULL mean only while nothing has been
+    counted yet, and always a NULL max (batch StepHistorical MAX).
 
     A large group arrives as MULTIPLE Arrow chunks whose relative row
     order is arbitrary — concat and sort ONCE before accumulating, or
@@ -101,8 +122,6 @@ def _running_features_impl(
     out is evicted (bounded state at billions of conversations); its
     accumulators restart from zero if it ever reappears — the
     documented trade for unbounded-keyspace streams."""
-    import numpy as np
-
     if state.hasTimedOut:
         state.remove()
         return
@@ -111,33 +130,31 @@ def _running_features_impl(
     else:
         s0, c0, m0 = 0.0, 0, None
     chunks = [pdf for pdf in batches if len(pdf)]
-    for pdf in (
-        [pd.concat(chunks, ignore_index=True).sort_values("turn_idx")]
-        if chunks
-        else []
-    ):
-        v = pdf["value"]
-        notna = v.notna()
-        cnt = c0 + notna.cumsum()
-        csum = s0 + v.fillna(0.0).cumsum()
-        mean = (csum / cnt).where(cnt > 0)
-        cmax = v.cummax()
+    if chunks:
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        order = np.argsort(pdf["turn_idx"].to_numpy(), kind="stable")
+        v = pdf["value"].to_numpy(dtype=np.float64)[order]
+        notna = ~np.isnan(v)
+        cnt = c0 + np.cumsum(notna)
+        csum = s0 + np.cumsum(np.where(notna, v, 0.0))
+        mean = np.full(len(v), np.nan)
+        np.divide(csum, cnt, out=mean, where=cnt > 0)
+        mx = np.fmax.accumulate(v)
         if m0 is not None:
-            cmax = np.maximum(cmax.fillna(m0), m0)
-        # cum_max semantics: null output at null input rows
-        # (matches batch StepHistorical MAX)
-        vmax = pd.Series(cmax, index=pdf.index).where(notna)
-        out = pdf[["conv_id", "turn_idx", "value"]].copy()
-        out["value_mean"] = mean
-        out["value_max"] = vmax
-        out["value_count"] = cnt
-        yield out
-        if len(v):
-            s0 = float(csum.iloc[-1])
-            c0 = int(cnt.iloc[-1])
-            batch_max = v.max()
-            if pd.notna(batch_max):
-                m0 = float(batch_max) if m0 is None else max(m0, float(batch_max))
+            mx = np.fmax(mx, m0)
+        yield pd.DataFrame(
+            {
+                "conv_id": pdf["conv_id"].to_numpy()[order],
+                "turn_idx": pdf["turn_idx"].to_numpy()[order],
+                "value": v,
+                "value_mean": mean,
+                "value_max": np.where(notna, mx, np.nan),
+                "value_count": cnt,
+            }
+        )
+        s0, c0 = float(csum[-1]), int(cnt[-1])
+        if not np.isnan(mx[-1]):
+            m0 = float(mx[-1])
     state.update((s0, c0, m0))
     if idle_timeout:
         # only when armed: a swallowed failure here would silently
@@ -158,7 +175,15 @@ def streaming_running_features(
     ``idle_timeout=True`` enables processing-time state eviction
     (_IDLE_TIMEOUT_MS): without it, one GroupState row lives per
     conversation FOREVER — unbounded at billions of conversations;
-    with it, state is bounded by the live-conversation working set."""
+    with it, state is bounded by the live-conversation working set.
+
+    Cost: one Python pass per state partition per micro-batch, two with
+    ``idle_timeout=True``, each with a fixed start cost — so a batch
+    costs about the same whatever its size. The partition count is
+    ``spark.sql.shuffle.partitions`` when the checkpoint is first
+    started and stays frozen there: a checkpoint created with 8 keeps 8.
+    Under ``Trigger.AvailableNow``, ``idle_timeout=True`` terminates only
+    with ``spark.sql.streaming.noDataMicroBatches.enabled=false``."""
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if idle_timeout

@@ -108,3 +108,36 @@ def test_apply_respects_hand_set_bucket_size(spark, turns):
         assert cfg["steps"][0]["skew_bucket_kept_user_value"] == 777
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
+
+
+def test_median_step_never_gets_a_bucket(spark, turns, monkeypatch):
+    """A MEDIAN StepHistorical has no salted plan: neither
+    prep(auto_skew=True) nor the advisor assigns it a bucket, even when
+    the salt crossover is forced down to one row (the MEAN step next
+    to it shows the crossover did fire)."""
+    df = turns.select("conv_id", "ts", "value")
+
+    def build():
+        return (
+            Recipe(df, predictors=["value"], groups="conv_id", sequences="ts")
+            .add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEAN))
+            .add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEDIAN))
+        )
+
+    monkeypatch.setattr(Recipe, "AUTO_SKEW_SALT_ABOVE", 1)
+    rec = build()
+    rec.prep(auto_skew=True)
+    mean_step, median_step = rec.steps
+    assert mean_step.skew_bucket_size is not None
+    assert median_step.skew_bucket_size is None
+
+    rec = build()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        cfg = recommend_pipeline_config(df, rec, apply=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    assert cfg["steps"][0]["skew_bucket_size"] is not None
+    assert cfg["steps"][1]["skew_capable"] is False
+    assert cfg["steps"][1]["skew_bucket_size"] is None
+    assert rec.steps[1].skew_bucket_size is None

@@ -1,6 +1,8 @@
 """Structured-Streaming operators: file-source replay of the transcript
 table, compared against the batch equivalents."""
 
+import contextlib
+
 import numpy as np
 import pytest
 
@@ -21,6 +23,27 @@ def transcript_dir(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("stream") / "transcripts")
     synthetic_transcripts(spark, n_convs=40, skew=False, with_features=True).write.parquet(path)
     return path
+
+
+@contextlib.contextmanager
+def _conf(spark, settings):
+    """Set session confs for the block, then restore the previous values."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+#: AvailableNow ends with the idle timeout armed only without no-data
+#: batches (streaming/session.py)
+_NO_DATA_BATCHES_OFF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 def _run_stream(spark, stream_df, name, output_mode):
@@ -66,44 +89,53 @@ def test_streaming_session_stats_matches_batch(spark, transcript_dir):
     assert got == exp
 
 
-def test_streaming_running_features_matches_batch(spark, transcript_dir):
-    batch = spark.read.parquet(transcript_dir)
-    stream = spark.readStream.schema(batch.schema).parquet(transcript_dir).select(
-        "conv_id", "turn_idx", "value"
-    )
-    out = (
-        _run_stream(spark, streaming_running_features(stream), "run_feats", "append")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
+def _running_oracle(batch):
+    """Batch StepHistorical MEAN/MAX/COUNT over ``batch``, sorted."""
     rec = Recipe(
         batch, predictors=["value"], groups="conv_id", sequences="turn_idx"
-    ).add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEAN))
-    rec.add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MAX))
-    rec.add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.COUNT))
-    oracle = (
+    )
+    for fun in (Accumulator.MEAN, Accumulator.MAX, Accumulator.COUNT):
+        rec.add_step(StepHistorical(sel=all_of(["value"]), fun=fun))
+    return (
         rec.prep()
         .select("conv_id", "turn_idx", "value_mean", "value_max", "value_count")
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
     )
+
+
+def _assert_running_matches(out, oracle):
+    """Count and max exact, mean within 1e-9 relative (the stream sums
+    in float, the batch mean in exact decimal)."""
+    out = out.sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     assert len(out) == len(oracle)
+    assert list(out.conv_id) == list(oracle.conv_id)
+    assert list(out.turn_idx) == list(oracle.turn_idx)
     np.testing.assert_allclose(
         out.value_mean.to_numpy(dtype=float),
         oracle.value_mean.to_numpy(dtype=float),
         equal_nan=True,
         rtol=1e-9,
     )
-    np.testing.assert_allclose(
+    np.testing.assert_array_equal(
         out.value_max.to_numpy(dtype=float),
         oracle.value_max.to_numpy(dtype=float),
-        equal_nan=True,
     )
     np.testing.assert_array_equal(
         out.value_count.to_numpy(), oracle.value_count.to_numpy()
     )
+
+
+def test_streaming_running_features_matches_batch(spark, transcript_dir):
+    batch = spark.read.parquet(transcript_dir)
+    stream = spark.readStream.schema(batch.schema).parquet(transcript_dir).select(
+        "conv_id", "turn_idx", "value"
+    )
+    out = _run_stream(
+        spark, streaming_running_features(stream), "run_feats", "append"
+    ).toPandas()
+    _assert_running_matches(out, _running_oracle(batch))
 
 
 def test_streaming_watermark_drops_late_data(spark, tmp_path):
@@ -169,30 +201,84 @@ def test_streaming_running_features_with_idle_timeout(spark, transcript_dir):
     the same results for conversations active within the window."""
     batch = spark.read.parquet(transcript_dir)
     stream = spark.readStream.schema(batch.schema).parquet(transcript_dir)
-    out = _run_stream(
-        spark,
-        streaming_running_features(
-            stream.select("conv_id", "turn_idx", "value"), idle_timeout=True
-        ),
-        "running_feats_ttl",
-        "append",
-    ).toPandas().sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    with _conf(spark, _NO_DATA_BATCHES_OFF):
+        out = _run_stream(
+            spark,
+            streaming_running_features(
+                stream.select("conv_id", "turn_idx", "value"), idle_timeout=True
+            ),
+            "running_feats_ttl",
+            "append",
+        ).toPandas()
+    _assert_running_matches(out, _running_oracle(batch))
 
-    rec = Recipe(
-        batch, predictors=["value"], groups="conv_id", sequences="turn_idx"
-    ).add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEAN))
-    oracle = (
-        rec.prep()
-        .select("conv_id", "turn_idx", "value_mean")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    np.testing.assert_allclose(
-        out["value_mean"].to_numpy(dtype=float),
-        oracle["value_mean"].to_numpy(dtype=float),
-        equal_nan=True,
-    )
+
+@pytest.mark.parametrize("idle_timeout", [False, True])
+def test_streaming_running_features_carry_across_batches(
+    spark, tmp_path, idle_timeout
+):
+    """Conversations spanning several micro-batches (one file each):
+    the prior state (sum, count, max) must carry across batches — an
+    all-NULL run opening a conversation, an all-NULL run inside a later
+    batch, a new max after a NULL run — and a group split into several
+    Arrow chunks must be sorted as one."""
+    import os
+
+    import pandas as pd
+
+    nan = float("nan")
+    # (conv_id, turn_idx, value) per file; turns are shuffled inside a
+    # file so that chunk order never matches turn order
+    files = [
+        [("a", 1, nan), ("a", 0, nan), ("b", 1, 2.0), ("b", 0, 4.0)],
+        [("a", 3, nan), ("a", 2, 1.0), ("a", 4, 3.0),
+         ("b", 3, nan), ("b", 2, nan), ("b", 4, nan)],
+        [("a", 6, nan), ("a", 5, nan), ("b", 6, 1.0), ("b", 5, 7.0)]
+        + [("c", t, nan if t % 4 == 1 else float(t * 7 % 11))
+           for t in (9, 3, 0, 7, 1, 5, 8, 2, 6, 4)],
+        [("a", 8, 2.0), ("a", 7, 5.0), ("b", 7, nan)]
+        + [("c", t, float(t % 5) if t % 3 else nan)
+           for t in (14, 10, 12, 11, 13)],
+    ]
+    d = tmp_path / "turns"
+    d.mkdir()
+    t0 = 1_700_000_000
+    for i, rows in enumerate(files):
+        f = d / f"part-{i}.parquet"
+        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "value"]).astype(
+            {"turn_idx": "int32"}
+        ).to_parquet(f, index=False)
+        os.utime(f, (t0 + i, t0 + i))  # the file source orders by mtime
+    schema = "conv_id string, turn_idx int, value double"
+
+    name = f"carry_{int(idle_timeout)}"
+    small_chunks = {"spark.sql.execution.arrow.maxRecordsPerBatch": "3"}
+    with _conf(spark, {**small_chunks, **_NO_DATA_BATCHES_OFF}):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(d))
+        )
+        q = (
+            streaming_running_features(stream, idle_timeout=idle_timeout)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+    data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(data_batches) == len(files)
+    out = spark.sql(f"select * from {name}").toPandas()
+
+    oracle = _running_oracle(spark.read.schema(schema).parquet(str(d)))
+    _assert_running_matches(out, oracle)
+    # the fixture really exercises the carried state: a NULL-led
+    # conversation, and a max set after a NULL run in a later batch
+    a = oracle[oracle.conv_id == "a"]
+    assert a.value_mean.isna().sum() == 2 and a.value_count.iloc[-1] == 4
+    assert oracle[oracle.conv_id == "b"].value_max.max() == 7.0
 
 
 def test_streaming_exact_dedup_matches_batch_fingerprints(spark, tmp_path_factory):
