@@ -1,1 +1,2 @@
-"""Window-spec builders, skew helpers, and text feature functions."""
+"""Window-spec builders, skew helpers, text feature functions, and the
+worker-start hook every shipped function calls first (worker.ready)."""

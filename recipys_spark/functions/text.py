@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import pandas as pd  # type hints of the Arrow simhash UDF
 from pyspark.sql import functions as F
+from recipys_spark.functions.worker import ready
 
 # tiny per-language stopword lists for the heuristic language ID
 STOPWORDS = {
@@ -174,6 +175,7 @@ def simhash32_udf(hash_family: str = "xxhash64"):
 
     @F.pandas_udf("long")
     def sh(texts: pd.Series) -> pd.Series:
+        ready()
         out = np.zeros(len(texts), dtype=np.int64)
         for j, txt in enumerate(texts):
             if txt is None:

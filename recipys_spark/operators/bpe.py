@@ -30,6 +30,8 @@ import pandas as pd  # type hints of the Arrow encode UDF
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from recipys_spark.functions.worker import ready
+
 END = "</w>"  # end-of-word marker (Sennrich): keeps merges word-internal
 
 
@@ -169,6 +171,7 @@ def bpe_encode_udf(merges: Sequence):
 
     @F.pandas_udf("array<string>")
     def enc(texts: pd.Series) -> pd.Series:
+        ready()
         cache: dict = {}
         out = []
         for t in texts:

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from recipys_spark.functions.text import char_shingles, fingerprint, simhash32, tokens
+from recipys_spark.functions.worker import ready
 
 
 def exact_dedup(
@@ -216,6 +217,7 @@ def minhash_signature_udf(
 
     @F.pandas_udf("array<bigint>")
     def sig(toks):
+        ready()
         import pandas as pd
 
         out = []

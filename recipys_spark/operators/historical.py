@@ -38,10 +38,17 @@ from recipys_spark.ingredients import Ingredients
 from recipys_spark.operators.base import Accumulator, Step
 from recipys_spark.selector import Selector, all_numeric_predictors
 from recipys_spark.functions.windows import expanding
+from recipys_spark.functions.worker import ready
 
 
 def historical_expr(col: str, fun: Accumulator, frame) -> "F.Column":
-    """The single-window expression for one accumulator."""
+    """The single-window expression for one accumulator.
+
+    MEDIAN here (``F.percentile``) is the SQL mirror of
+    ``StepHistorical._expanding_median``, and the two differ on a NaN
+    *value*: ``percentile`` sorts NaN above every number and counts it,
+    while the step skips it, as pandas ``expanding().median()`` does.
+    Compare the two on inputs whose missing values are NULL, not NaN."""
     c = F.col(col)
     # cum_max/cum_min semantics (polars cum_*, pandas cummax/cummin):
     # nulls are skipped for the running value but the OUTPUT at a
@@ -282,7 +289,11 @@ class StepHistorical(Step):
         and NaN values skipped) runs per batch, with the still-open
         group's carried values prepended. Only that open group's sorted
         non-null values are carried, so memory is O(batch + largest
-        group), not O(partition)."""
+        group), not O(partition).
+
+        A NaN value is skipped like NULL, as in pandas; the window
+        mirror counts it as the largest value instead (see
+        ``historical_expr``), so mirror comparisons must use NULL."""
         import numpy as np
         import pandas as pd
         import pyarrow as pa
@@ -315,6 +326,7 @@ class StepHistorical(Step):
             return np.invert(same.to_numpy(zero_copy_only=False))
 
         def per_partition(batches):
+            ready()
             last_key = None  # previous batch's last row, per group column
             held = {c: np.empty(0) for c in cols}  # open group's sorted non-nulls
             for batch in batches:

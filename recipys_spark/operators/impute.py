@@ -43,6 +43,7 @@ from recipys_spark.functions.windows import (
     following,
     trailing,
 )
+from recipys_spark.functions.worker import ready
 
 _STRATEGIES = ("forward", "backward", "mean", "min", "max", "zero", "one")
 
@@ -299,6 +300,7 @@ class StepImputeModel(Step):
         schema = df.schema
 
         def apply_model(pdf):
+            ready()
             return model(pdf, group_cols)
 
         return df.groupBy(*groups).applyInPandas(apply_model, schema=schema)

@@ -69,6 +69,7 @@ from pyspark.sql import functions as F
 from recipys_spark.ingredients import Ingredients
 from recipys_spark.operators.base import Step
 from recipys_spark.selector import Selector, all_predictors
+from recipys_spark.functions.worker import ready
 
 
 # ---------------------------------------------------------------------------
@@ -237,6 +238,7 @@ def _collected_pool_fill(
     )
 
     def impute(batches):
+        ready()
         for pdf in batches:
             X = pdf[feats].to_numpy(dtype=np.float64, copy=True)
             ids = pdf[id_col].to_numpy()
@@ -683,6 +685,7 @@ class StepImputeKNN(Step):
         names = list(df.columns)
 
         def impute(batches):
+            ready()
             import pandas as pd
 
             for pdf in batches:

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from recipys_spark.functions.worker import ready
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -158,6 +160,7 @@ def synthetic_jpegs(
     differs per row — the metadata-oracle fixture."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             rows, metas = [], []
             for mid in pdf["id"]:
@@ -334,6 +337,7 @@ def synthetic_pngs(
     mirror replays the same arithmetic from ``range(n)``)."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             rows, metas = [], []
             for mid in pdf["id"]:
@@ -370,6 +374,7 @@ def extract_features(
     """binary payload → float feature vector, one Arrow batch at a time."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             feats = [decoder(p).tolist() for p in pdf["payload"]]
             yield pd.DataFrame(
@@ -468,6 +473,7 @@ def extract_metadata(df: DataFrame, parser: Callable[[bytes], tuple], fields) ->
     schema = ", ".join(["media_id long"] + [f"{c} long" for c in names])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             cols: dict = {"media_id": pdf["media_id"].astype("int64")}
             vals = [parser(bytes(p)) for p in pdf["payload"]]
@@ -588,6 +594,7 @@ def synthetic_images(spark: SparkSession, n: int = 100, size: int = 16) -> DataF
     any parallelism), generated executor-side via mapInPandas."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             rows = []
             for mid in pdf["id"]:
@@ -705,6 +712,7 @@ def synthetic_wavs(
     fmt-chunk metadata differs per row — the metadata-oracle fixture."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             payloads = []
             for mid in pdf["id"]:

@@ -24,6 +24,8 @@ import pandas as pd  # type hints of the Arrow signature UDFs
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from recipys_spark.functions.worker import ready
+
 
 def dot_expr(a, b):
     return F.aggregate(
@@ -111,6 +113,7 @@ def cosine_udf():
 
     @F.pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
+        ready()
         n = len(a)
         out = [None] * n
         idx = [
@@ -296,6 +299,7 @@ def hyperplane_signature_udf(n_planes: int, dim: int, seed: int = 42,
 
     @F.pandas_udf("long")
     def sig(emb: pd.Series) -> pd.Series:
+        ready()
         n = len(emb)
         out = [None] * n  # NULL embedding → NULL signature (expr parity)
         idx = [i for i in range(n) if emb.iloc[i] is not None]
@@ -543,6 +547,7 @@ def ivf_cells_udf(centroids, nprobe: int = 1):
 
     @F.pandas_udf("array<int>")
     def cells(emb: pd.Series) -> pd.Series:
+        ready()
         n = len(emb)
         out = [None] * n  # NULL embedding → NULL cell list (expr parity)
         idx = [i for i in range(n) if emb.iloc[i] is not None]

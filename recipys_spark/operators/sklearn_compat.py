@@ -29,6 +29,7 @@ from pyspark.sql import types as T
 from recipys_spark.ingredients import Ingredients
 from recipys_spark.operators.base import Step
 from recipys_spark.selector import Selector, all_predictors
+from recipys_spark.functions.worker import ready
 
 try:  # pragma: no cover - environment-dependent
     import sklearn  # noqa: F401
@@ -181,6 +182,7 @@ class StepSklearn(Step):
         out_names = [f.name for f in out_fields]
 
         def transform_batches(it):
+            ready()
             for pdf in it:
                 if columnwise:
                     mats = [

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from recipys_spark.operators.jpeg import JPEG_MAGIC, decode_jpeg, encode_jpeg
+from recipys_spark.functions.worker import ready
 
 AVI_FORM = b"AVI "
 RIFF_MAGIC = b"RIFF"
@@ -265,6 +266,7 @@ def extract_frame_features(df: DataFrame) -> DataFrame:
     from recipys_spark.operators.multimodal import image_features, resize_nearest
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             ids, idxs, mss, feats = [], [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -296,6 +298,7 @@ def synthetic_avis(
     from recipys_spark.operators.multimodal import MEDIA_SCHEMA
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             rows, metas = [], []
             for mid in pdf["id"]:

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from recipys_spark.functions.worker import ready
+
 WARC_RECORD_SCHEMA = T.StructType(
     [
         T.StructField("file_id", T.LongType()),
@@ -156,6 +158,7 @@ def parse_warc_records(
     batch row, zero shuffle, embarrassingly parallel across files."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         for pdf in batches:
             rows = []
             for fid, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -186,6 +189,7 @@ def synthetic_warc(
     mirror replays the arithmetic from range(n))."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ready()
         import gzip as _gzip
 
         for pdf in batches:

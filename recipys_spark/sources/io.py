@@ -38,11 +38,14 @@ def get_spark(
     Arrow on, shuffle partitions equal to ``parallelism`` (one per core)
     unless ``shuffle_partitions`` is given.
 
-    One per core, not more: every task of a Python stage pays a fixed
-    worker start cost, and stateful streaming operators skip AQE, so
-    their partition count is this setting, frozen at a checkpoint's
-    first start (streaming/session.py). It is also the advisor's floor
-    (plans/advisor.py)."""
+    One per core, not more: each Python worker's first task pays a fixed
+    start cost (~0.9 s of CPU measured on Python 3.11, imports plus one
+    re-read of pyspark.zip's directory; later tasks skip the re-read
+    through functions/worker.py), every state partition of a stateful
+    streaming operator runs its own Python passes per micro-batch, and
+    those operators skip AQE, so their partition count is this setting,
+    frozen at a checkpoint's first start (streaming/session.py). It is
+    also the advisor's floor (plans/advisor.py)."""
     if shuffle_partitions is None:
         shuffle_partitions = parallelism
     import os as _os

@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from recipys_spark.functions.worker import ready
+
 _IDLE_TIMEOUT_MS = 6 * 3600 * 1000
 
 _OUT_SCHEMA = T.StructType(
@@ -75,6 +77,7 @@ def _tok_count(text) -> int:
 
 def _make_assembler(budget: int, max_turns: int, sep: str, idle_timeout: bool):
     def assemble(key, batches: Iterator[pd.DataFrame], state: GroupState):
+        ready()
         if state.hasTimedOut:
             state.remove()
             return

@@ -13,17 +13,22 @@ counterparts cover the live-ingest path of a transcript pipeline:
   the expanding-window StepHistorical MEAN/MAX/COUNT (sum, count and max
   carried in state, Arrow-batched).
 
-Cost model of ``streaming_running_features``. Its Python cost per
-micro-batch is fixed per state partition, not per row: each partition
-runs one Python pass per batch, and a second one when
-``idle_timeout=True`` (Spark starts a separate runner to process timed-out
-state on every batch, even when no key times out). Every pass pays a
-fixed start cost in the worker, ~0.1–0.2 s of CPU on Python 3.11. The
+Cost model of ``streaming_running_features``. Each state partition
+runs one Python pass per micro-batch, and a second one when
+``idle_timeout=True`` (Spark starts a separate runner to process
+timed-out state on every batch, even when no key times out). The shipped
+function calls ``functions.worker.ready()`` first, so a pass no longer
+pays pyspark's per-task zip-directory re-read once its worker has run
+one task. Measured per Python task on a 4-core host, Python 3.11, 4000
+rows over 400 conversations in four partitions: the timed-out-state
+pass 1–5 ms of CPU (0.2–0.3 s before ``ready()``); a data pass of
+~100–225 groups 0.16–0.44 s, most of it the per-group Arrow → pandas →
+Arrow round trip of ``applyInPandasWithState``, not the numpy body; each
+worker's first task ~0.9 s (imports plus the one re-read). The
 partition count is ``spark.sql.shuffle.partitions`` at the checkpoint's
 FIRST start and is frozen there (stateful operators skip AQE), so a
 checkpoint created under an older, larger setting keeps its partitions;
-``get_spark`` sizes it to one partition per core. Inside a pass, the
-per-conversation body is numpy over the group's arrays.
+``get_spark`` sizes it to one partition per core.
 
 Under ``Trigger.AvailableNow``, ``idle_timeout=True`` terminates only with
 ``spark.sql.streaming.noDataMicroBatches.enabled=false``: the processing-
@@ -42,6 +47,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from recipys_spark.functions.worker import ready
 
 
 def streaming_session_stats(
@@ -97,6 +104,7 @@ def _make_running_features(idle_timeout: bool):
     def _running_features(
         key, batches: Iterator[pd.DataFrame], state: GroupState
     ):
+        ready()
         return _running_features_impl(key, batches, state, idle_timeout)
 
     return _running_features
@@ -178,8 +186,9 @@ def streaming_running_features(
     with it, state is bounded by the live-conversation working set.
 
     Cost: one Python pass per state partition per micro-batch, two with
-    ``idle_timeout=True``, each with a fixed start cost — so a batch
-    costs about the same whatever its size. The partition count is
+    ``idle_timeout=True``. The timed-out-state pass costs milliseconds;
+    a data pass is dominated by the per-group Arrow ↔ pandas round trip
+    (~1.5–2 ms per group; module docstring). The partition count is
     ``spark.sql.shuffle.partitions`` when the checkpoint is first
     started and stays frozen there: a checkpoint created with 8 keeps 8.
     Under ``Trigger.AvailableNow``, ``idle_timeout=True`` terminates only

@@ -3,6 +3,7 @@ tests/test_steps.py:127–154 re-expressed; oracle = the reference's own
 pandas-backend semantics: groupby(id).expanding() with skipna)."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -316,3 +317,31 @@ def test_median_partition_semantics(spark):
         if r["id"] is not None and np.isnan(r["id"])
     )
     assert [m for _, m in nan_rows] == [4.0, 6.0, 4.0]
+
+
+def test_median_nan_value_split(spark):
+    """A NaN *value* is where the median and its window mirror part
+    ways: ``StepHistorical(MEDIAN)`` skips it, as pandas
+    ``expanding().median()`` does, while the mirror's ``F.percentile``
+    sorts it above every number and counts it. Mirror comparisons
+    therefore use NULL, never NaN, for missing values."""
+    rows = [
+        (1, 0.0, 1.0), (1, 1.0, NAN), (1, 2.0, 3.0), (1, 3.0, None),
+        (1, 4.0, 5.0), (2, 0.0, NAN), (2, 1.0, 2.0),
+    ]
+    sdf = spark.createDataFrame(rows, "id long, time double, x1 double")
+    rec = Recipe(sdf, predictors=["x1"], groups="id", sequences="time").add_step(
+        StepHistorical(sel=all_of(["x1"]), fun=Accumulator.MEDIAN)
+    )
+    got = [r["x1_median"] for r in rec.prep().orderBy("id", "time").collect()]
+    # a group with no number yet is NULL here, NaN in pandas
+    assert got == [1.0, 1.0, 2.0, 2.0, 3.0, None, 2.0]
+    oracle = (
+        pd.DataFrame(rows, columns=["id", "time", "x1"])
+        .groupby("id")["x1"].expanding().median().to_numpy()
+    )
+    np.testing.assert_array_equal(np.array(got, dtype=float), oracle)
+    mirror = median_mirror(sdf, ["x1"], ["id"], ["time"]).orderBy("id", "time")
+    assert [_nan_tag(r["x1_median"]) for r in mirror.collect()] == [
+        1.0, "NaN", 3.0, 3.0, 4.0, "NaN", "NaN",
+    ]

@@ -37,6 +37,7 @@ def test_zip_imports_cleanly(tmp_path):
         "from recipys_spark.operators.jpeg import decode_jpeg; "
         "from recipys_spark.streaming import dedup, session; "
         "import recipys_spark.sources.io; "
+        "import recipys_spark.functions.worker; "
         "assert 'recipys_spark.zip' in recipys_spark.__file__, recipys_spark.__file__; "
         "print('ZIP_IMPORT_OK', recipys_spark.__file__)"
     ) % zpath

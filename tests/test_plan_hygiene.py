@@ -8,9 +8,13 @@ These tests inspect ``explain`` output rather than results:
   scan's ReadSchema;
 - predicate pushdown: a filter must appear in PushedFilters;
 - broadcast: the as-of broadcast strategy must plan a
-  BroadcastHashJoin / BroadcastNestedLoopJoin, not a sort-merge join.
+  BroadcastHashJoin / BroadcastNestedLoopJoin, not a sort-merge join;
+- worker start: every function the package ships to Python workers
+  calls ``functions.worker.ready()`` first (an AST walk, no Spark).
 """
 
+import ast
+import os
 import re
 
 import pytest
@@ -191,3 +195,136 @@ def test_unigram_vocab_join_not_force_broadcast(spark):
     # and values still flow on the default path (AQE/static broadcast)
     rows = out.collect()
     assert len(rows) == 100
+
+
+_SHIPPERS = {
+    "mapInArrow",
+    "mapInPandas",
+    "applyInPandas",
+    "applyInArrow",
+    "applyInPandasWithState",
+}
+_PKG = os.path.join(os.path.dirname(os.path.dirname(__file__)), "recipys_spark")
+
+
+def _is_pandas_udf(dec) -> bool:
+    f = dec.func if isinstance(dec, ast.Call) else dec
+    return (isinstance(f, ast.Attribute) and f.attr == "pandas_udf") or (
+        isinstance(f, ast.Name) and f.id == "pandas_udf"
+    )
+
+
+def _shipped_functions(tree):
+    """(line, function def or None) for every function the module ships:
+    the first argument of a shipping call, resolved through the
+    enclosing scopes by name (a factory call resolves to the def it
+    returns), and every ``pandas_udf``-decorated def."""
+    scopes = {}  # node -> innermost enclosing function/module scope
+    defs = {}  # (scope, name) -> the def of that name in that scope
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            scopes[child] = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[(scope, child.name)] = child
+                visit(child, child)
+            else:
+                visit(child, scope)
+
+    visit(tree, tree)
+
+    def resolve(name, scope):
+        while True:
+            if (scope, name) in defs:
+                return defs[(scope, name)]
+            if scope is tree:
+                return None
+            scope = scopes[scope]
+
+    def shipped(arg, scope):
+        if isinstance(arg, ast.Name):
+            return resolve(arg.id, scope)
+        factory = (
+            resolve(arg.func.id, scope)
+            if isinstance(arg, ast.Call) and isinstance(arg.func, ast.Name)
+            else None
+        )
+        if factory is None:
+            return None
+        returns = [
+            r.value.id
+            for r in ast.walk(factory)
+            if isinstance(r, ast.Return)
+            and isinstance(r.value, ast.Name)
+            and scopes[r] is factory
+        ]
+        return resolve(returns[0], factory) if len(returns) == 1 else None
+
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and any(
+            _is_pandas_udf(d) for d in node.decorator_list
+        ):
+            yield node.lineno, node
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _SHIPPERS
+        ):
+            args = list(node.args) + [k.value for k in node.keywords if k.arg == "func"]
+            yield node.lineno, shipped(args[0], scopes[node]) if args else None
+
+
+def _calls_ready_first(fn) -> bool:
+    body = fn.body
+    if (
+        body
+        and isinstance(body[0], ast.Expr)
+        and isinstance(body[0].value, ast.Constant)
+        and isinstance(body[0].value.value, str)
+    ):
+        body = body[1:]  # docstring
+    first = body[0] if body else None
+    return (
+        isinstance(first, ast.Expr)
+        and isinstance(first.value, ast.Call)
+        and isinstance(first.value.func, ast.Name)
+        and first.value.func.id == "ready"
+        and not first.value.args
+    )
+
+
+def _imports_ready(tree) -> bool:
+    return any(
+        isinstance(s, ast.ImportFrom)
+        and s.module == "recipys_spark.functions.worker"
+        and any(a.name == "ready" and a.asname is None for a in s.names)
+        for s in tree.body
+    )
+
+
+def test_every_shipped_function_calls_ready_first():
+    """Every function passed to a Python-worker op or decorated with
+    ``pandas_udf`` calls ``ready()`` — imported at module level from
+    ``recipys_spark.functions.worker`` — as its first statement. One
+    forgotten site costs each of its tasks the ~0.1–0.2 s zip-directory
+    re-read on Python < 3.13 (functions/worker.py)."""
+    bad, n_sites = [], 0
+    for dirpath, _, files in os.walk(_PKG):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            rel = os.path.relpath(path, os.path.dirname(_PKG))
+            sites = list(_shipped_functions(tree))
+            n_sites += len(sites)
+            for line, node in sites:
+                if node is None:
+                    bad.append(f"{rel}:{line}: shipped function not resolvable")
+                elif not _calls_ready_first(node):
+                    bad.append(f"{rel}:{node.lineno}: {node.name} does not call ready() first")
+                elif not _imports_ready(tree):
+                    bad.append(f"{rel}: ready is not a module-level import")
+    assert n_sites, "the walk found no shipped function"
+    assert not bad, "\n".join(bad)
