@@ -99,6 +99,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+_FAN_MIN_BYTES = 4 * 1024**2
+
+
 def _fan_scan(spark: SparkSession, df: DataFrame, *keys: str) -> DataFrame:
     """Fan an unsplittable scan out to the session's core count
     (guide §2.5 "input skew: one huge unsplittable file → repartition
@@ -120,26 +123,23 @@ def _fan_scan(spark: SparkSession, df: DataFrame, *keys: str) -> DataFrame:
     alternative is a serial stage). Results are partitioning-invariant
     everywhere this is used.
 
-    Size floor: below ~4 MB of input (env
-    ``SPARK_GRAFT_FAN_MIN_BYTES``) the exchange's fixed cost rivals
-    the serial compute it would save on ANY cluster, so tiny inputs
-    (the sf0.01/0.1 correctness tables) skip the fan — measured +0.2 s
-    per query at sf0.1 without the floor, pure overhead."""
+    Size floor: below ``_FAN_MIN_BYTES`` (~4 MB) of input the
+    exchange's fixed cost rivals the serial compute it would save on
+    ANY cluster, so tiny inputs (the sf0.01/0.1 correctness tables)
+    skip the fan — measured +0.2 s per query at sf0.1 without the
+    floor, pure overhead."""
     import os as _os
 
     n = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
-    min_bytes = int(
-        float(_os.environ.get("SPARK_GRAFT_FAN_MIN_BYTES", str(4 * 1024**2)))
-    )
     try:
         paths = [p[len("file:"):] if p.startswith("file:") else p
                  for p in df.inputFiles()]
         total = sum(_os.path.getsize(p) for p in paths if _os.path.exists(p))
     except Exception:
         total = None  # non-file source: fan on partition count alone
-    if total is not None and 0 < total < min_bytes:
+    if total is not None and 0 < total < _FAN_MIN_BYTES:
         return df
     return df.repartition(n, *[F.col(k) for k in keys])
 

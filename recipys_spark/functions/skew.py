@@ -20,6 +20,14 @@ MEDIAN is not decomposable, so StepHistorical rejects a
 streaming mapInArrow pass) holds only the open group's values at a
 time, so memory scales with the largest group, not the partition.
 
+Bounded frames use row-exact buckets instead: :func:`carry_buckets`
+copies each bucket its predecessor's last rows, so a frame of k prior
+rows never crosses a bucket (StepRolling's :func:`salted_trailing`,
+transcripts.assemble_context's salted plan). The as-of join's hot-key
+plan (operators/asof.py) is :func:`salted_fill` over a donor struct.
+This module owns how to salt; when to salt is plans/advisor.py's
+``skew_buckets``, under the crossovers below.
+
 When to salt (measured, see BENCH.md): the salted plan costs extra
 shuffles and forfeits cross-step window fusion, so it LOSES below
 ~10^6 turns per conversation (29 s vs 61 s at a 1.6M-turn straggler)
@@ -207,18 +215,6 @@ def salted_expanding(
     return joined.select(*base_cols, *out_exprs)
 
 
-def salted_ffill(
-    df: DataFrame,
-    cols: Sequence[str],
-    groups: Sequence[str],
-    sequence: str,
-    bucket_size: int,
-) -> DataFrame:
-    """Two-phase group-scoped forward fill for skewed groups (the
-    unbounded-forward specialization of :func:`salted_fill`)."""
-    return salted_fill(df, cols, groups, sequence, bucket_size, forward=True)
-
-
 def salted_fill(
     df: DataFrame,
     cols: Sequence[str],
@@ -227,27 +223,43 @@ def salted_fill(
     bucket_size: int,
     forward: bool = True,
     limit: "int | None" = None,
+    order: "Sequence[str] | None" = None,
+    null_key_donors: bool = True,
 ) -> DataFrame:
     """Two-phase group-scoped directional fill for skewed groups:
     forward or backward, optionally bounded to ``limit`` consecutive
-    rows. Exactly equal to the single-window fill.
+    rows. Exactly equal to the single-window fill ordered by ``order``
+    (default ``[sequence]``; it must start with ``sequence``, which
+    alone picks the buckets — the as-of join orders by (ts, side)).
 
     Phase 1 fills within (group, bucket); phase 2 computes each
     bucket's edge non-null donor per column and fills THOSE across
     buckets (tiny table); phase 3 coalesces. With ``limit``, the donor
     payload is a struct carrying the donor's decomposable per-group row
     number (salted_row_number — no whole-group sort), so the null-run
-    distance check needs no extra pass."""
+    distance check needs no extra pass; row numbers follow ``sequence``
+    only, so ``limit`` takes no ``order``.
+
+    The join-back is NULL-safe (_ns_join), which costs a sort-merge
+    join one more shuffle of every row. ``null_key_donors=False``
+    promises that no row with a NULL group key holds a value in
+    ``cols`` (the as-of join drops such right rows), so the join can
+    match on the plain keys, reusing the intra window's shuffle; a
+    NULL-key row then gets only in-bucket fills — none, under the
+    promise."""
     groups = list(groups)
     base_cols = list(df.columns)
+    order = list(order or [sequence])
     if limit is not None:
+        if order != [sequence]:
+            raise ValueError("salted_fill: limit= orders by sequence only")
         df = salted_row_number(df, groups, sequence, bucket_size, out_col="__rid")
     df = df.withColumn(_BUCKET, _bucket_expr(df, sequence, bucket_size))
 
     if forward:
         intra = (
             Window.partitionBy(*groups, _BUCKET)
-            .orderBy(sequence)
+            .orderBy(*order)
             .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         )
         cross = (
@@ -259,7 +271,7 @@ def salted_fill(
     else:
         intra = (
             Window.partitionBy(*groups, _BUCKET)
-            .orderBy(sequence)
+            .orderBy(*order)
             .rowsBetween(Window.currentRow, Window.unboundedFollowing)
         )
         # "prior" buckets in fill direction = later buckets: order desc
@@ -271,23 +283,25 @@ def salted_fill(
         pick, edge_by = F.first, F.min_by
 
     def payload(c: str):
+        # a bare column (ignorenulls skips its NULLs) is windowed in
+        # place; an expression would be copied into the shuffle beside it
         if limit is None:
             return F.col(c)
-        return F.struct(F.col("__rid").alias("rid"), F.col(c).alias("v"))
+        rid = F.struct(F.col("__rid").alias("rid"), F.col(c).alias("v"))
+        return F.when(F.col(c).isNotNull(), rid)
 
-    mk = {c: F.when(F.col(c).isNotNull(), payload(c)) for c in cols}
+    mk = {c: payload(c) for c in cols}
     filled = df.select(
         "*",
         *[pick(mk[c], ignorenulls=True).over(intra).alias(f"__d_{c}") for c in cols],
     )
 
     # per-bucket edge donor (last non-null for forward, first for
-    # backward), order-sensitively via max_by/min_by on the sequence
+    # backward), order-sensitively via max_by/min_by on the order key
+    key = F.struct(*order)
     totals = df.groupBy(*groups, _BUCKET).agg(
         *[
-            edge_by(mk[c], F.when(F.col(c).isNotNull(), F.col(sequence))).alias(
-                f"__edge_{c}"
-            )
+            edge_by(mk[c], F.when(F.col(c).isNotNull(), key)).alias(f"__edge_{c}")
             for c in cols
         ]
     )
@@ -299,7 +313,10 @@ def salted_fill(
             for c in cols
         ],
     )
-    joined = _ns_join(filled, prefix, groups, [_BUCKET], how="left")
+    if null_key_donors:
+        joined = _ns_join(filled, prefix, groups, [_BUCKET], how="left")
+    else:
+        joined = filled.join(prefix, [*groups, _BUCKET], "left")
 
     def result(c: str):
         donor = F.coalesce(F.col(f"__d_{c}"), F.col(f"__pre_{c}"))
@@ -464,6 +481,41 @@ def salted_lag(
     )
 
 
+def carry_buckets(
+    df: DataFrame,
+    groups: Sequence[str],
+    sequence: str,
+    bucket_size: int,
+    rows_per_bucket: int,
+    carry: int,
+) -> DataFrame:
+    """Row-exact buckets for bounded frames: the per-group row number
+    ``__rid`` (salted_row_number), the bucket ``__rbkt`` of
+    ``rows_per_bucket`` rows, plus a copy of each bucket's last
+    ``carry`` rows in the NEXT bucket, tagged ``__carry = 1`` (0 on the
+    originals). A frame of at most ``carry`` prior rows then never
+    crosses a (group, ``__rbkt``) partition; callers window over it
+    ordered by ``__rid`` and keep ``__carry == 0``."""
+    if rows_per_bucket < max(carry, 1):
+        raise ValueError(
+            f"rows_per_bucket ({rows_per_bucket}) must be >= 1 and >= the "
+            f"{carry} carry rows the frame needs"
+        )
+    with_rid = salted_row_number(df, groups, sequence, bucket_size)
+    # integer `div`, not double `/` + cast (exact at any row id — the
+    # pack_sequences lesson)
+    tagged = with_rid.withColumn(
+        "__rbkt", F.expr(f"(__rid - 1) div {int(rows_per_bucket)}")
+    )
+    pos = (F.col("__rid") - 1) % F.lit(int(rows_per_bucket))
+    copies = (
+        tagged.where(pos >= F.lit(int(rows_per_bucket) - int(carry)))
+        .withColumn("__rbkt", F.col("__rbkt") + 1)
+        .withColumn("__carry", F.lit(1))
+    )
+    return tagged.withColumn("__carry", F.lit(0)).unionByName(copies)
+
+
 def salted_trailing(
     df: DataFrame,
     cols: Sequence[str],
@@ -480,51 +532,34 @@ def salted_trailing(
     Unlike the expanding case, a trailing frame of ``window`` rows only
     ever needs the previous ``window-1`` rows — so instead of a
     prefix-merge, each ROW-exact bucket gets a copy of its predecessor
-    bucket's last ``window-1`` rows ("carry" rows), the plain bounded
-    window runs within (group, bucket), and carry rows are dropped.
-    Row-exact buckets come from the decomposable row number
-    (salted_row_number), so every bucket except the last has exactly
-    ``rows_per_bucket`` rows and one carry hop always suffices.
+    bucket's last ``window-1`` rows (:func:`carry_buckets`), the plain
+    bounded window runs within (group, bucket), and carry rows are
+    dropped. Every bucket except the last has exactly
+    ``rows_per_bucket`` rows, so one carry hop always suffices.
     Exactly equal to the single-window rolling result; works for ALL
     accumulators (bounded frames keep MEDIAN at O(window) per row)."""
-    from recipys_spark.operators.historical import rolling_expr
+    from recipys_spark.operators.historical import rolling_expr, rolling_sum_diff
 
-    if rows_per_bucket < window:
-        raise ValueError("rows_per_bucket must be >= window")
     groups = list(groups)
     base_cols = list(df.columns)
-    with_rid = salted_row_number(df, groups, sequence, bucket_size)
-    rbkt = F.expr(f"(__rid - 1) div {int(rows_per_bucket)}")
-    pos = (F.col("__rid") - 1) % F.lit(rows_per_bucket)
-    tagged = with_rid.withColumn("__rbkt", rbkt).withColumn("__pos", pos)
-    own = tagged.withColumn("__carry", F.lit(0))
-    carry = (
-        tagged.where(F.col("__pos") >= F.lit(rows_per_bucket - (window - 1)))
-        .withColumn("__rbkt", F.col("__rbkt") + 1)
-        .withColumn("__carry", F.lit(1))
+    unioned = carry_buckets(
+        df, groups, sequence, bucket_size, rows_per_bucket, window - 1
     )
-    unioned = own.unionByName(carry)
     if fun in (Accumulator.MEAN, Accumulator.VAR):
-        from recipys_spark.operators.historical import rolling_sum_diff
-
         out = rolling_sum_diff(
             unioned, cols, fun, window, [*groups, "__rbkt"], ["__rid"], suffix
         )
-        return out.where(F.col("__carry") == 0).select(
-            *base_cols, *[F.col(f"{c}_{suffix}") for c in cols]
+    else:
+        w = (
+            Window.partitionBy(*groups, "__rbkt")
+            .orderBy("__rid")
+            .rowsBetween(-(window - 1), Window.currentRow)
         )
-    w = (
-        Window.partitionBy(*groups, "__rbkt")
-        .orderBy("__rid")
-        .rowsBetween(-(window - 1), Window.currentRow)
-    )
-    exprs = [
-        rolling_expr(c, fun, w).alias(f"{c}_{suffix}") for c in cols
-    ]
-    return (
-        unioned.select("*", *exprs)
-        .where(F.col("__carry") == 0)
-        .select(*base_cols, *[F.col(f"{c}_{suffix}") for c in cols])
+        out = unioned.select(
+            "*", *[rolling_expr(c, fun, w).alias(f"{c}_{suffix}") for c in cols]
+        )
+    return out.where(F.col("__carry") == 0).select(
+        *base_cols, *[F.col(f"{c}_{suffix}") for c in cols]
     )
 
 
@@ -561,12 +596,22 @@ def group_size_stats(df: DataFrame, groups: Sequence[str], sequence: str) -> dic
     }
 
 
+#: salt crossovers (rows in the largest group), from the BENCH.md
+#: measurements: unbounded windows (expanding, fill, lag, sessionize)
+#: sort a whole group in ONE task, so they salt past ~4M rows (7.9–40×
+#: wins measured); bounded frames (rolling, context assembly) are
+#: O(frame) per row in one sorted task and only win once a group
+#: exceeds an executor's sort capacity, ~10^8 rows
+AUTO_SKEW_SALT_ABOVE = 4_000_000
+AUTO_SKEW_ROLLING_SALT_ABOVE = 100_000_000
+
+
 def recommend_skew_bucket_size(
     df: DataFrame,
     groups: Sequence[str],
     sequence: str,
     target_rows_per_bucket: int = 500_000,
-    salt_above_rows: int = 4_000_000,
+    salt_above_rows: int = AUTO_SKEW_SALT_ABOVE,
     stats: "dict | None" = None,
 ) -> "int | None":
     """Measured-crossover advisor (BENCH.md): below ~10^6–10^7 rows in

@@ -27,11 +27,12 @@ Two physical strategies:
   ``max_by``. Row blowup is bounded by the right side's per-key
   cardinality — only for genuinely small right tables.
 - ``salted`` (hot single key): the union strategy still windows on
-  ``partitionBy(keys)`` — one task per key. The salted variant buckets
-  the merged stream by time (functions/skew.py pattern): intra-bucket
-  window for the latest right row within (key, bucket), per-bucket
-  edge-donor table forward-filled across buckets (tiny), join-back and
-  coalesce. Exactly equal to ``union``; use when one key dominates.
+  ``partitionBy(keys)`` — one task per key. The salted variant runs the
+  same backward fill of the right-row donor struct through
+  functions/skew.salted_fill, bucketed by time: intra-bucket window
+  within (key, bucket), per-bucket edge donors forward-filled across
+  buckets (tiny), join-back and coalesce. Exactly equal to ``union``;
+  use when one key dominates.
   Measured (BENCH.md): parity at a 2M-row hot key, 40x faster at 16M
   (union 400s -> salted 10s, local[32]).
 """
@@ -114,6 +115,10 @@ def asof_join(
         raise ValueError("direction='nearest' is supported by the union strategy")
     keys = [on] if isinstance(on, str) else list(on)
     right_ts = right_ts or left_ts
+    # as in SQL, a NULL key or timestamp never matches: without this the
+    # window plans would pair NULL keys with each other (and a NULL-ts
+    # right row would sort before every left row)
+    right = right.dropna(subset=[*keys, right_ts])
     value_cols = [c for c in right.columns if c not in keys and c != right_ts]
     out_names = {c: f"{c}{suffix}" for c in value_cols}
     collisions = sorted(set(out_names.values()) & set(left.columns))
@@ -187,59 +192,6 @@ def asof_join(
 
     unioned = l_tagged.unionByName(r_tagged)
 
-    if strategy == "salted":
-        from recipys_spark.functions.skew import _BUCKET, _bucket_expr
-
-        unioned = unioned.withColumn(
-            _BUCKET, _bucket_expr(unioned, "__ts", bucket_size)
-        )
-        donor_fields = [F.col("__r_ts").alias("__mts")] + [
-            F.col(f"__r_{c}").alias(c) for c in value_cols
-        ]
-        donor = F.when(F.col(_SIDE) == 0, F.struct(*donor_fields))
-        intra = (
-            Window.partitionBy(*keys, _BUCKET)
-            .orderBy(F.col("__ts"), F.col(_SIDE))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        with_intra = unioned.select(
-            "*", F.last(donor, ignorenulls=True).over(intra).alias("__intra")
-        )
-        # per-bucket latest right donor; buckets with no right rows get
-        # NULL (max_by skips null ordering keys) so the cross-bucket
-        # ffill below carries earlier donors through them
-        totals = unioned.groupBy(*keys, _BUCKET).agg(
-            F.max_by(donor, F.when(F.col(_SIDE) == 0, F.col("__ts"))).alias("__edge")
-        )
-        prior = (
-            Window.partitionBy(*keys)
-            .orderBy(_BUCKET)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        prefix = totals.select(
-            *keys,
-            F.col(_BUCKET),
-            F.last("__edge", ignorenulls=True).over(prior).alias("__pre"),
-        )
-        joined = (
-            with_intra.where(F.col(_SIDE) == 1)
-            .join(prefix, [*keys, _BUCKET], "left")
-            .withColumn("__match", F.coalesce(F.col("__intra"), F.col("__pre")))
-        )
-        if tol is not None:
-            lt = left.schema[left_ts].dataType
-            rt = right.schema[right_ts].dataType
-            in_tol = (
-                _ts_num(F.col("__ts"), lt) - _ts_num(F.col("__match")["__mts"], rt)
-            ) <= F.lit(tol)
-            vals = [
-                F.when(in_tol, F.col("__match")[c]).alias(out_names[c])
-                for c in value_cols
-            ]
-        else:
-            vals = [F.col("__match")[c].alias(out_names[c]) for c in value_cols]
-        return joined.select(*left.columns, *vals)
-
     # Row-level match semantics (pandas merge_asof / SQL ASOF JOIN):
     # the matched right ROW wins even where one of its value columns is
     # null — pack the row into a struct so the fill is row-atomic, not
@@ -278,15 +230,23 @@ def asof_join(
     null_ts_guard = F.col("__ts").isNotNull()
 
     if direction in ("backward", "forward"):
-        if direction == "backward":
+        if strategy == "salted":
+            from recipys_spark.functions.skew import salted_fill
+
+            # w_back's fill, bucketed by ts so a hot key spreads out
+            filled = salted_fill(
+                unioned.withColumn("__match", donor), ["__match"], keys,
+                "__ts", bucket_size, order=["__ts", _SIDE], null_key_donors=False,
+            )
+        elif direction == "backward":
             matched = F.last(donor, ignorenulls=True).over(w_back)
+            filled = unioned.select("*", matched.alias("__match"))
         else:
             matched = F.when(
                 null_ts_guard, F.first(donor, ignorenulls=True).over(w_fwd)
             )
-        filled = unioned.select("*", matched.alias("__match")).where(
-            F.col(_SIDE) == 1
-        )
+            filled = unioned.select("*", matched.alias("__match"))
+        filled = filled.where(F.col(_SIDE) == 1)
         ts_n = _ts_num(F.col("__ts"), lt)
         m_n = _ts_num(F.col("__match")["__mts"], rt)
         diff = (ts_n - m_n) if direction == "backward" else (m_n - ts_n)

@@ -48,6 +48,10 @@ class Step:
     #: output row) — lets the memoized Ingredients.row_count() cache
     #: flow through so later fitted steps skip their count probe
     _row_preserving: bool = False
+    #: True while ``skew_bucket_size`` holds a bucket that
+    #: ``Recipe.prep(auto_skew=True)`` derived (plans/advisor.assign_bucket)
+    #: rather than one the user chose
+    _auto_skew_assigned: bool = False
 
     def __init__(self, sel: Optional[Selector] = None) -> None:
         self.sel = sel if sel is not None else Selector("all columns")

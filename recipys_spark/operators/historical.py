@@ -380,13 +380,3 @@ class StepHistorical(Step):
             per_partition, schema=out_schema
         )
 
-
-def takes_skew_bucket(step) -> bool:
-    """Whether ``skew_bucket_size`` switches ``step`` to a salted plan:
-    every step with the knob except an exact-MEDIAN StepHistorical,
-    whose one plan has no salted form (its constructor rejects a
-    bucket). ``Recipe.prep(auto_skew=True)`` and the advisor both ask
-    this before assigning a bucket."""
-    return hasattr(step, "skew_bucket_size") and not (
-        isinstance(step, StepHistorical) and step.fun is Accumulator.MEDIAN
-    )

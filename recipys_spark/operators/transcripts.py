@@ -119,8 +119,6 @@ def assemble_context(
             )
         if len(list(order_cols)) != 1:
             raise ValueError("the salted plan supports a single order column")
-        if rows_per_bucket < int(max_turns):
-            raise ValueError("rows_per_bucket must be >= max_turns")
         seq_dtype = dict(df.dtypes)[list(order_cols)[0]]
         if not _bucketable_dtype(seq_dtype):
             raise ValueError(
@@ -149,24 +147,13 @@ def assemble_context(
         )
         keep_pred = None
     else:
-        from recipys_spark.functions.skew import salted_row_number
+        from recipys_spark.functions.skew import carry_buckets
 
         mt = int(max_turns)
-        with_rid = salted_row_number(
-            frame, [conv_col], order[0], int(skew_bucket_size)
+        frame = carry_buckets(
+            frame, [conv_col], order[0], int(skew_bucket_size),
+            int(rows_per_bucket), mt,
         )
-        # integer `div`, not double `/` + cast (exact at any row id —
-        # the pack_sequences lesson)
-        rbkt = F.expr(f"(__rid - 1) div {int(rows_per_bucket)}")
-        pos = (F.col("__rid") - 1) % F.lit(int(rows_per_bucket))
-        tagged = with_rid.withColumn("__rbkt", rbkt).withColumn("__pos", pos)
-        own = tagged.withColumn("__carry", F.lit(0))
-        carry = (
-            tagged.where(F.col("__pos") >= F.lit(int(rows_per_bucket) - mt))
-            .withColumn("__rbkt", F.col("__rbkt") + 1)
-            .withColumn("__carry", F.lit(1))
-        )
-        frame = own.unionByName(carry)
         # local running sum per (conv, bucket): the retention predicate
         # only reads cum DIFFERENCES of rows <= max_turns apart, which
         # always share a (bucket + carry) partition — offsets cancel
@@ -367,6 +354,7 @@ class StepAssembleContext(Step):
             "max_turns": self.max_turns,
             "out_col": self.out_col,
             "skew_bucket_size": self.skew_bucket_size,
+            "skew_bucket_auto": self._auto_skew_assigned,
             "rows_per_bucket": self.rows_per_bucket,
         }
 
@@ -378,5 +366,8 @@ class StepAssembleContext(Step):
         self.out_col = state["out_col"]
         # older manifests (pre-round-5 review) lack the skew fields
         self.skew_bucket_size = state.get("skew_bucket_size")
+        # an auto_skew bucket stays auto-derived, so the next prep
+        # re-derives or drops it (plans/advisor.assign_bucket)
+        self._auto_skew_assigned = state.get("skew_bucket_auto", False)
         self.rows_per_bucket = state.get("rows_per_bucket", 100_000)
         self._trained = True

@@ -5,7 +5,11 @@ probing (functions/skew.group_size_stats), per-step-class salted-bucket
 recommendations (recommend_skew_bucket_size under the measured BENCH.md
 crossovers), ANN LSH parameters (similarity.recommend_lsh_params), and
 shuffle-partition arithmetic — into one report a 100 TB operator can
-read (and optionally apply) BEFORE ``Recipe.prep``.
+read (and optionally apply) BEFORE ``Recipe.prep``. The salting policy
+itself lives here too, for this report and for
+``Recipe.prep(auto_skew=True)`` alike: ``skew_buckets`` decides every
+step's bucket, and ``assign_bucket`` writes it unless the user chose
+one.
 
 Cost: ONE group-count aggregation pass over the input (the
 group_size_stats probe, which also yields the exact row count) plus, if
@@ -41,6 +45,11 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 
+from recipys_spark.functions import skew
+from recipys_spark.ingredients import Ingredients
+from recipys_spark.operators.base import Accumulator
+from recipys_spark.operators.historical import StepHistorical, StepRolling
+from recipys_spark.operators.transcripts import StepAssembleContext
 from recipys_spark.recipe import Recipe
 
 #: shuffle sizing: aim for partitions of ~4M rows (a few hundred MB for
@@ -48,6 +57,72 @@ from recipys_spark.recipe import Recipe
 #: large enough that task overhead stays amortized; AQE coalesces the
 #: slack at runtime
 TARGET_ROWS_PER_PARTITION = 4_000_000
+
+
+def takes_skew_bucket(step) -> bool:
+    """Whether ``skew_bucket_size`` switches ``step`` to a salted plan:
+    every step with the knob except an exact-MEDIAN StepHistorical,
+    whose one plan has no salted form (its constructor rejects a
+    bucket)."""
+    return hasattr(step, "skew_bucket_size") and not (
+        isinstance(step, StepHistorical) and step.fun is Accumulator.MEDIAN
+    )
+
+
+def skew_stats(ingredients: Ingredients) -> Optional[dict]:
+    """The one skew probe: ``group_size_stats`` over the group roles and
+    the first sequence role (one aggregation pass), or None when the
+    data has no group or no sequence role."""
+    groups = ingredients.select_roles("group")
+    seqs = ingredients.select_roles("sequence")
+    if not groups or not seqs:
+        return None
+    return skew.group_size_stats(ingredients.df, groups, seqs[0])
+
+
+def skew_buckets(stats: Optional[dict], steps) -> list:
+    """The salting policy: each step's ``skew_bucket_size`` (None = the
+    plain plan) for the probe ``stats`` (None = no probe: all plain).
+
+    Only steps that :func:`takes_skew_bucket` get a bucket. Bounded
+    frames (StepRolling, StepAssembleContext) salt past
+    ``skew.AUTO_SKEW_ROLLING_SALT_ABOVE`` rows in the largest group,
+    every other step past ``skew.AUTO_SKEW_SALT_ABOVE``. Writes nothing:
+    :func:`assign_bucket` does."""
+
+    def above(rows):
+        if stats is None:
+            return None
+        return skew.recommend_skew_bucket_size(
+            None, None, None, salt_above_rows=rows, stats=stats
+        )
+
+    window = above(skew.AUTO_SKEW_SALT_ABOVE)
+    rolling = above(skew.AUTO_SKEW_ROLLING_SALT_ABOVE)
+    bounded = (StepRolling, StepAssembleContext)
+    return [
+        (rolling if isinstance(s, bounded) else window) if takes_skew_bucket(s) else None
+        for s in steps
+    ]
+
+
+def hand_set(step) -> bool:
+    """Whether the user chose ``step``'s bucket: set, and not tagged
+    ``_auto_skew_assigned`` by an earlier ``Recipe.prep(auto_skew=True)``
+    (a tagged bucket was derived from other data and is re-derived)."""
+    return step.skew_bucket_size is not None and not step._auto_skew_assigned
+
+
+def assign_bucket(step, bucket, auto: bool) -> bool:
+    """Write ``bucket`` onto ``step`` unless the user chose its bucket
+    (:func:`hand_set`); returns whether it wrote. ``auto=True`` tags the
+    bucket as derived (``Recipe.prep``), ``auto=False`` makes it count
+    as hand-chosen from then on (the advisor's ``apply=True``)."""
+    if hand_set(step):
+        return False
+    step.skew_bucket_size = bucket
+    step._auto_skew_assigned = auto
+    return True
 
 
 def recommend_pipeline_config(
@@ -64,10 +139,9 @@ def recommend_pipeline_config(
       plus ``total_rows`` — or just ``total_rows`` when ``recipe`` has
       no group/sequence roles to probe.
     - ``steps``: per recipe step, its class, whether it is
-      skew-capable, and the recommended ``skew_bucket_size`` under the
-      measured per-class crossovers (bounded trailing frames salt at
-      Recipe.AUTO_SKEW_ROLLING_SALT_ABOVE, unbounded window steps at
-      Recipe.AUTO_SKEW_SALT_ABOVE) — None where the plain plan wins.
+      skew-capable, and its ``skew_bucket_size`` under the salting
+      policy :func:`skew_buckets` (the one ``Recipe.prep(auto_skew=
+      True)`` applies) — None where the plain plan wins.
     - ``shuffle_partitions``: ceil(total_rows / target_rows_per_
       partition) clamped below by the session's default parallelism —
       the number every groupBy/join/window Exchange in the baked plan
@@ -78,56 +152,22 @@ def recommend_pipeline_config(
     ``apply=True`` additionally sets the session's shuffle partitions
     and writes the recommended bucket sizes onto the steps (untagged =
     hand-chosen precedence)."""
-    from recipys_spark.functions.skew import (
-        group_size_stats,
-        recommend_skew_bucket_size,
-    )
-    from recipys_spark.ingredients import Ingredients
-
     spark = df.sparkSession
     steps = list(recipe.steps) if recipe is not None else []
-    groups: list = []
-    seqs: list = []
+    probe = None
     if recipe is not None and recipe.data is not None:
-        ing = Ingredients(df, recipe.data.roles, check_roles=False)
-        groups = ing.select_roles("group")
-        seqs = ing.select_roles("sequence")
-
-    stats: dict
-    if groups and seqs:
-        # one pass: total_rows comes out of the same group-count agg
-        stats = dict(group_size_stats(df, groups, seqs[0]))
-    else:
-        stats = {"total_rows": df.count()}
-
-    step_rows = []
-    window_bucket = rolling_bucket = None
-    if groups and seqs:
-        window_bucket = recommend_skew_bucket_size(
-            df, groups, seqs[0],
-            salt_above_rows=Recipe.AUTO_SKEW_SALT_ABOVE, stats=stats,
-        )
-        rolling_bucket = recommend_skew_bucket_size(
-            df, groups, seqs[0],
-            salt_above_rows=Recipe.AUTO_SKEW_ROLLING_SALT_ABOVE, stats=stats,
-        )
-    from recipys_spark.operators.historical import StepRolling, takes_skew_bucket
-    from recipys_spark.operators.transcripts import StepAssembleContext
-
-    for i, s in enumerate(steps):
-        capable = takes_skew_bucket(s)
-        bucket = None
-        if capable and groups and seqs:
-            bounded_frame = isinstance(s, (StepRolling, StepAssembleContext))
-            bucket = rolling_bucket if bounded_frame else window_bucket
-        step_rows.append(
-            {
-                "index": i,
-                "class": type(s).__name__,
-                "skew_capable": capable,
-                "skew_bucket_size": bucket,
-            }
-        )
+        probe = skew_stats(Ingredients(df, recipe.data.roles, check_roles=False))
+    # one pass: total_rows comes out of the same group-count agg
+    stats = probe or {"total_rows": df.count()}
+    step_rows = [
+        {
+            "index": i,
+            "class": type(s).__name__,
+            "skew_capable": takes_skew_bucket(s),
+            "skew_bucket_size": bucket,
+        }
+        for i, (s, bucket) in enumerate(zip(steps, skew_buckets(probe, steps)))
+    ]
 
     floor = spark.sparkContext.defaultParallelism
     shuffle_partitions = max(
@@ -153,17 +193,10 @@ def recommend_pipeline_config(
     if apply:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         for row, s in zip(step_rows, steps):
-            if row["skew_capable"] and row["skew_bucket_size"] is not None:
-                # respect an explicit hand-chosen setting: a step whose
-                # skew_bucket_size is already set and NOT auto-tagged was
-                # configured by the user — leave it and say so in the
-                # report instead of silently replacing it (ADVICE r6)
-                if getattr(s, "skew_bucket_size", None) is not None and not getattr(
-                    s, "_auto_skew_assigned", False
-                ):
-                    row["skew_bucket_kept_user_value"] = s.skew_bucket_size
-                    continue
-                s.skew_bucket_size = row["skew_bucket_size"]
-                s._auto_skew_assigned = False  # hand-chosen precedence
+            # a hand-chosen bucket stays; the report says so instead of
+            # silently replacing it (ADVICE r6)
+            bucket = row["skew_bucket_size"]
+            if bucket is not None and not assign_bucket(s, bucket, auto=False):
+                row["skew_bucket_kept_user_value"] = s.skew_bucket_size
         out["applied"] = True
     return out

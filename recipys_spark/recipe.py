@@ -76,12 +76,6 @@ def _untag(obj):
 
 
 class Recipe:
-    #: auto_skew crossover thresholds (rows in the largest group), from
-    #: the BENCH.md measurements; class attributes so deployments (and
-    #: tests) can tune them for their executor memory profile
-    AUTO_SKEW_SALT_ABOVE = 4_000_000
-    AUTO_SKEW_ROLLING_SALT_ABOVE = 100_000_000
-
     def __init__(
         self,
         data: Union[DataFrame, Ingredients],
@@ -233,69 +227,6 @@ class Recipe:
             i += 1
         return ingredients
 
-    def _configure_auto_skew(self, ingredients: Ingredients) -> dict:
-        """Probe group-size skew ONCE and thread the advisor's bucket
-        size into every skew-capable step that wasn't hand-configured
-        (functions/skew.py encodes the BENCH.md measured crossovers).
-
-        Per-class policy, from the crossover measurements (a MEDIAN
-        StepHistorical has no salted plan and is never assigned one):
-        - expanding/fill/lag/sessionize steps: their plain plans put a
-          whole group through ONE window task (O(n) state) — salt when
-          the largest group exceeds ~4M rows (7.9–40× wins measured).
-        - StepRolling (trailing windows): the cumsum-difference plan is
-          O(1)/row in a single task, so salting only pays once a group
-          exceeds one executor's sort capacity — threshold 10^8 rows.
-        """
-        from recipys_spark.functions.skew import (
-            group_size_stats,
-            recommend_skew_bucket_size,
-        )
-        from recipys_spark.operators.historical import StepRolling, takes_skew_bucket
-        from recipys_spark.selector import select_groups, select_sequence
-
-        groups = select_groups(ingredients)
-        seqs = select_sequence(ingredients)
-        # a step is configurable if the user never set a bucket:
-        # unset (None), or set by a PREVIOUS auto_skew pass (tagged) —
-        # without the tag, re-prepping on new data would mistake the
-        # stale auto-derived bucket for a hand-chosen one and never
-        # re-probe
-        configurable = [
-            s
-            for s in self.steps
-            if takes_skew_bucket(s)
-            and (
-                s.skew_bucket_size is None
-                or getattr(s, "_auto_skew_assigned", False)
-            )
-        ]
-        if not groups or not seqs or not configurable:
-            return {}
-        stats = group_size_stats(ingredients.df, groups, seqs[0])
-        window_bucket = recommend_skew_bucket_size(
-            ingredients.df, groups, seqs[0],
-            salt_above_rows=self.AUTO_SKEW_SALT_ABOVE, stats=stats,
-        )
-        rolling_bucket = recommend_skew_bucket_size(
-            ingredients.df, groups, seqs[0],
-            salt_above_rows=self.AUTO_SKEW_ROLLING_SALT_ABOVE, stats=stats,
-        )
-        from recipys_spark.operators.transcripts import StepAssembleContext
-
-        for s in configurable:
-            # bounded trailing frames (StepRolling, context assembly:
-            # O(frame) state per row in one sorted task) only win from
-            # salting past the ROLLING crossover (~10^8 rows, BENCH.md);
-            # unbounded expanding/fill windows salt at the lower
-            # window threshold
-            bounded_frame = isinstance(s, (StepRolling, StepAssembleContext))
-            s.skew_bucket_size = (
-                rolling_bucket if bounded_frame else window_bucket
-            )
-            s._auto_skew_assigned = True
-        return stats
-
     def prep(
         self,
         data: Optional[Union[DataFrame, Ingredients]] = None,
@@ -307,19 +238,17 @@ class Recipe:
         ``auto_skew=True`` runs one group-size probe and configures the
         salted two-phase plans on skew-capable steps per the measured
         crossovers — the hands-free version of passing
-        ``skew_bucket_size`` to each step."""
+        ``skew_bucket_size`` to each step. Without it, buckets an earlier
+        ``auto_skew`` prep derived are dropped; hand-chosen ones stay
+        (plans/advisor.skew_buckets holds the policy)."""
+        from recipys_spark.plans import advisor
+
         ingredients = self._check_data(data)
-        if auto_skew:
-            self._configure_auto_skew(ingredients)
-        else:
-            # drop buckets a PREVIOUS auto_skew prep derived (tagged) —
-            # they were probed on a different dataset and would silently
-            # persist on the shared Step objects; hand-chosen buckets
-            # (untagged) are the user's and stay
-            for s in self.steps:
-                if getattr(s, "_auto_skew_assigned", False):
-                    s.skew_bucket_size = None
-                    s._auto_skew_assigned = False
+        steps = [s for s in self.steps if advisor.takes_skew_bucket(s)]
+        steps = [s for s in steps if not advisor.hand_set(s)]
+        stats = advisor.skew_stats(ingredients) if auto_skew and steps else None
+        for s, bucket in zip(steps, advisor.skew_buckets(stats, steps)):
+            advisor.assign_bucket(s, bucket, auto=stats is not None)
         result = self._apply_fit_transform(ingredients, refit=refit)
         # record post-prep roles so bake wraps inputs consistently
         if self.data is not None:

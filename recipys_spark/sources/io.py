@@ -45,27 +45,11 @@ def get_spark(
     streaming operator runs its own Python passes per micro-batch, and
     those operators skip AQE, so their partition count is this setting,
     frozen at a checkpoint's first start (streaming/session.py). It is
-    also the advisor's floor (plans/advisor.py)."""
+    also the advisor's floor (plans/advisor.py). ``extra_conf``
+    overrides any of these settings, e.g. the AQE and join floors
+    below."""
     if shuffle_partitions is None:
         shuffle_partitions = parallelism
-    import os as _os
-
-    # AQE coalescing floor (guide §2.2): the default 1 MB floor merges
-    # small-but-compute-dense shuffles (interpreted array ops, decimal
-    # window sorts) down to a handful of partitions, serializing their
-    # downstream stages on a many-core box. A 64 KB floor preserves
-    # parallelism there; at cluster scale it is inert — coalescing
-    # targets come from totalBytes/parallelism or the 64 MB advisory
-    # size long before a 64 KB floor binds. Env-overridable so a
-    # deployment can restore the default ("1m") without code changes.
-    min_part = _os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k")
-    # Join strategy (guide §3.1): allow shuffled-hash joins where the
-    # per-partition build side fits (sort-merge pays two full sorts),
-    # both at plan time (preferSortMergeJoin=false — the planner's own
-    # build-side size conditions still apply) and at runtime via AQE's
-    # measured-size rewrite threshold. 64 MB per-partition build maps
-    # are modest for executors sized per §5; env-overridable.
-    shj_thresh = _os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
     b = (
         SparkSession.builder.master(f"local[{parallelism}]")
         .appName(app_name)
@@ -74,11 +58,22 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", min_part)
+        # AQE coalescing floor (guide §2.2): the default 1 MB floor
+        # merges small-but-compute-dense shuffles (interpreted array
+        # ops, decimal window sorts) down to a handful of partitions,
+        # serializing their downstream stages on a many-core box. A
+        # 64 KB floor preserves parallelism there; at cluster scale it
+        # is inert — coalescing targets come from totalBytes/parallelism
+        # or the 64 MB advisory size long before a 64 KB floor binds.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+        # Join strategy (guide §3.1): allow shuffled-hash joins where
+        # the per-partition build side fits (sort-merge pays two full
+        # sorts), both at plan time (preferSortMergeJoin=false — the
+        # planner's own build-side size conditions still apply) and at
+        # runtime via AQE's measured-size rewrite threshold. 64 MB
+        # per-partition build maps are modest for executors sized per §5.
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj_thresh
-        )
+        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # single-JVM local mode: driver heap IS the executor heap; an
         # undersized heap turns window sorts into spill+GC thrash

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from recipys_spark import Accumulator, Recipe
+from recipys_spark.functions import skew
 from recipys_spark.operators import StepHistorical, StepScale, StepSessionize
 from recipys_spark.plans.advisor import recommend_pipeline_config
 from recipys_spark.selector import all_of
@@ -43,14 +44,14 @@ def test_apply_threads_bucket_and_shuffle_partitions(spark, turns):
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # force a salt recommendation by dropping the crossover to 1 row
-        old = Recipe.AUTO_SKEW_SALT_ABOVE
-        Recipe.AUTO_SKEW_SALT_ABOVE = 1
+        old = skew.AUTO_SKEW_SALT_ABOVE
+        skew.AUTO_SKEW_SALT_ABOVE = 1
         try:
             cfg = recommend_pipeline_config(
                 df, rec, apply=True, target_rows_per_partition=100
             )
         finally:
-            Recipe.AUTO_SKEW_SALT_ABOVE = old
+            skew.AUTO_SKEW_SALT_ABOVE = old
         assert cfg["applied"] is True
         assert cfg["steps"][0]["skew_bucket_size"] is not None
         assert rec.steps[0].skew_bucket_size == cfg["steps"][0]["skew_bucket_size"]
@@ -95,14 +96,14 @@ def test_apply_respects_hand_set_bucket_size(spark, turns):
     )
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        old = Recipe.AUTO_SKEW_SALT_ABOVE
-        Recipe.AUTO_SKEW_SALT_ABOVE = 1
+        old = skew.AUTO_SKEW_SALT_ABOVE
+        skew.AUTO_SKEW_SALT_ABOVE = 1
         try:
             cfg = recommend_pipeline_config(
                 df, rec, apply=True, target_rows_per_partition=100
             )
         finally:
-            Recipe.AUTO_SKEW_SALT_ABOVE = old
+            skew.AUTO_SKEW_SALT_ABOVE = old
         assert cfg["applied"] is True
         assert rec.steps[0].skew_bucket_size == 777
         assert cfg["steps"][0]["skew_bucket_kept_user_value"] == 777
@@ -124,7 +125,7 @@ def test_median_step_never_gets_a_bucket(spark, turns, monkeypatch):
             .add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEDIAN))
         )
 
-    monkeypatch.setattr(Recipe, "AUTO_SKEW_SALT_ABOVE", 1)
+    monkeypatch.setattr(skew, "AUTO_SKEW_SALT_ABOVE", 1)
     rec = build()
     rec.prep(auto_skew=True)
     mean_step, median_step = rec.steps
@@ -141,3 +142,35 @@ def test_median_step_never_gets_a_bucket(spark, turns, monkeypatch):
     assert cfg["steps"][1]["skew_capable"] is False
     assert cfg["steps"][1]["skew_bucket_size"] is None
     assert rec.steps[1].skew_bucket_size is None
+
+
+@pytest.mark.parametrize("rolling_above", [1, 10**9])
+def test_prep_and_advisor_assign_the_same_buckets(spark, turns, monkeypatch, rolling_above):
+    """One salting policy (plans/advisor.skew_buckets) behind both
+    callers: prep(auto_skew=True) and recommend_pipeline_config give
+    every step the same bucket — an unbounded window (MEAN), a MEDIAN,
+    and the two bounded frames (rolling, context assembly) — with the
+    bounded-frame crossover both below and above the fixture."""
+    from recipys_spark.operators import StepAssembleContext, StepRolling
+
+    df = turns.select("conv_id", "ts", "value", "text")
+    monkeypatch.setattr(skew, "AUTO_SKEW_SALT_ABOVE", 1)
+    monkeypatch.setattr(skew, "AUTO_SKEW_ROLLING_SALT_ABOVE", rolling_above)
+
+    def build():
+        return (
+            Recipe(df, predictors=["value", "text"], groups="conv_id", sequences="ts")
+            .add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEAN))
+            .add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEDIAN))
+            .add_step(StepRolling(sel=all_of(["value"]), fun=Accumulator.MAX, window=3))
+            .add_step(StepAssembleContext(sel=all_of(["text"]), budget=6))
+        )
+
+    rec = build()
+    rec.prep(auto_skew=True)
+    cfg = recommend_pipeline_config(df, build())
+    buckets = [s.skew_bucket_size for s in rec.steps]
+    assert [r["skew_bucket_size"] for r in cfg["steps"]] == buckets
+    mean, median, rolling, context = buckets
+    assert mean is not None and median is None
+    assert rolling == context == (mean if rolling_above == 1 else None)

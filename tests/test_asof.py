@@ -353,3 +353,54 @@ def test_asof_null_left_ts_never_matches(spark):
             .set_index("payload")
         )
         assert pd.isna(got.loc[1, "feat"]), direction
+
+
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "salted"])
+def test_asof_null_keys_match_duckdb(spark, strategy):
+    """A NULL key or a NULL right timestamp never matches, as in SQL:
+    every strategy returns what DuckDB's ASOF LEFT JOIN returns (the
+    NULL-key left rows used to pick up the NULL-key right row in the
+    union plan, and in the salted plan only within its first bucket)."""
+    import duckdb
+    from pyspark.sql import types as T
+
+    left_rows = [(1, "a", 10), (2, None, 10), (3, None, 1000), (4, "b", 10)]
+    right_rows = [("a", 5, 1.0), (None, 5, 2.0), ("b", None, 3.0)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE l (id INT, key VARCHAR, ts BIGINT)")
+    con.execute("CREATE TABLE r (key VARCHAR, fts BIGINT, feat DOUBLE)")
+    con.executemany("INSERT INTO l VALUES (?, ?, ?)", left_rows)
+    con.executemany("INSERT INTO r VALUES (?, ?, ?)", right_rows)
+    want = dict(
+        con.execute(
+            "SELECT l.id, r.feat FROM l ASOF LEFT JOIN r "
+            "ON l.key = r.key AND l.ts >= r.fts"
+        ).fetchall()
+    )
+    assert want == {1: 1.0, 2: None, 3: None, 4: None}
+
+    left = spark.createDataFrame(
+        left_rows,
+        T.StructType(
+            [
+                T.StructField("id", T.LongType()),
+                T.StructField("key", T.StringType()),
+                T.StructField("ts", T.LongType()),
+            ]
+        ),
+    )
+    right = spark.createDataFrame(
+        right_rows,
+        T.StructType(
+            [
+                T.StructField("key", T.StringType()),
+                T.StructField("fts", T.LongType()),
+                T.StructField("feat", T.DoubleType()),
+            ]
+        ),
+    )
+    got = asof_join(
+        left, right, on="key", left_ts="ts", right_ts="fts",
+        strategy=strategy, bucket_size=100 if strategy == "salted" else None,
+    )
+    assert {r["id"]: r["feat"] for r in got.collect()} == want

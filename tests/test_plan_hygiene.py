@@ -136,6 +136,37 @@ def test_asof_union_strategy_single_window_pass(spark, transcripts):
     assert "Join" not in plan, plan
 
 
+def test_asof_salted_join_back_reuses_the_window_shuffle(spark, transcripts):
+    """The salted as-of plan (skew.salted_fill) shuffles the merged
+    stream once, by (key, bucket); its sort-merge join back to the
+    per-bucket prefix reuses that partitioning, so the other exchanges
+    all move the small prefix table (agg, cross-bucket window, join
+    side). The as-of join drops NULL-key right rows, so it needs no
+    NULL-safe struct-key join, which would re-shuffle every row a
+    second time (five exchanges)."""
+    feats = transcripts.where("role = 'tool'").select(
+        "conv_id", F.col("ts").alias("fts"), F.col("n_chars").alias("feat")
+    )
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        # a prefix too big to broadcast: the join is a sort-merge join
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        out = asof_join(
+            transcripts.select("conv_id", "turn_idx", "ts"),
+            feats,
+            on="conv_id",
+            left_ts="ts",
+            right_ts="fts",
+            strategy="salted",
+            bucket_size=3600,
+        )
+        plan = plan_of(out)
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "SortMergeJoin" in plan, plan
+    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 4, plan
+
+
 def test_stateless_math_steps_no_exchange(spark):
     """Polynomial and spline transforms are pure projections: the plan
     must contain no Exchange (shuffle) and no Window."""
@@ -327,4 +358,57 @@ def test_every_shipped_function_calls_ready_first():
                 elif not _imports_ready(tree):
                     bad.append(f"{rel}: ready is not a module-level import")
     assert n_sites, "the walk found no shipped function"
+    assert not bad, "\n".join(bad)
+
+
+def _env_reads(tree):
+    """(line, variable name or None) for every environment read: the
+    key of ``os.environ[...]`` / ``os.environ.get(...)`` /
+    ``os.getenv(...)`` (None when it is not a string literal, or the
+    environment is used some other way), and any ``from os import``
+    of ``environ``/``getenv``."""
+    parents = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "os":
+            for a in node.names:
+                if a.name in ("environ", "environb", "getenv", "getenvb"):
+                    yield node.lineno, None
+        if not (
+            isinstance(node, ast.Attribute)
+            and node.attr in ("environ", "environb", "getenv", "getenvb")
+        ):
+            continue
+        use, key = parents.get(node), None
+        if isinstance(use, ast.Attribute) and use.attr == "get":
+            use = parents.get(use)  # os.environ.get(...)
+        if isinstance(use, ast.Subscript):
+            key = use.slice
+        elif isinstance(use, ast.Call) and use.args:
+            key = use.args[0]
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            yield node.lineno, key.value
+        else:
+            yield node.lineno, None
+
+
+def test_no_env_knobs():
+    """Tuning lives in code — get_spark's settings (overridable through
+    ``extra_conf``) and plans/advisor.py — not in environment variables
+    nobody sets. The one environment read the package keeps is the
+    Iceberg jar's deployment path."""
+    allowed = {"SPARK_GRAFT_ICEBERG_JAR"}
+    bad = []
+    for dirpath, _, files in os.walk(_PKG):
+        for fn in sorted(files):
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fn)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read())
+            rel = os.path.relpath(path, os.path.dirname(_PKG))
+            bad += [
+                f"{rel}:{line}: reads env {name or '(not a literal)'}"
+                for line, name in _env_reads(tree)
+                if name not in allowed
+            ]
     assert not bad, "\n".join(bad)

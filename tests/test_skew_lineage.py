@@ -344,6 +344,25 @@ def test_salted_rolling_equals_plain(spark, transcripts, fun):
     )
 
 
+def test_salted_rolling_rejects_empty_buckets(spark, transcripts):
+    """A window of 1 needs no carry rows, but a bucket still needs a
+    row: rows_per_bucket=0 is refused at plan time instead of building
+    a division by zero."""
+    from recipys_spark.operators import StepRolling
+
+    rec = _recipe(transcripts).add_step(
+        StepRolling(
+            sel=all_of(["value"]),
+            fun=Accumulator.MEAN,
+            window=1,
+            skew_bucket_size=16,
+            skew_rows_per_bucket=0,
+        )
+    )
+    with pytest.raises(ValueError, match="rows_per_bucket"):
+        rec.prep()
+
+
 def test_incremental_bake_equals_full(spark):
     """incremental_bake over the groups new rows touch == a full
     re-bake, bit for bit."""
@@ -438,6 +457,7 @@ def test_prep_auto_skew_configures_and_matches_plain(spark, monkeypatch):
     import pandas as pd
 
     from recipys_spark import Accumulator, Recipe
+    from recipys_spark.functions import skew
     from recipys_spark.operators import StepHistorical
     from recipys_spark.operators.historical import StepRolling
     from recipys_spark.selector import all_of
@@ -463,7 +483,7 @@ def test_prep_auto_skew_configures_and_matches_plain(spark, monkeypatch):
                                   fun=Accumulator.MAX, window=3))
         )
 
-    monkeypatch.setattr(Recipe, "AUTO_SKEW_SALT_ABOVE", 100)
+    monkeypatch.setattr(skew, "AUTO_SKEW_SALT_ABOVE", 100)
 
     plain_rec = build()
     plain = (
@@ -557,6 +577,53 @@ def test_prep_without_auto_skew_resets_stale_auto_buckets(spark):
     assert step.skew_bucket_size == 777
 
 
+def test_auto_skew_bucket_stays_auto_across_save_load(spark, monkeypatch, tmp_path):
+    """A bucket prep(auto_skew=True) derived is still auto-derived after
+    save_state/load_state: a later plain prep drops it, and an auto_skew
+    prep on data below the crossover drops it too. Before, the reload
+    lost the tag and both kept the stale bucket as if hand-chosen."""
+    import pandas as pd
+
+    from recipys_spark.functions import skew
+    from recipys_spark.operators import StepAssembleContext
+
+    def frame(n_hot):
+        return spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "conv_id": [1] * n_hot + [2, 2],
+                    "turn_idx": list(range(n_hot)) + [0, 1],
+                    "text": ["a b"] * (n_hot + 2),
+                }
+            )
+        )
+
+    df = frame(400)
+
+    def build():
+        return Recipe(
+            df, predictors=["text"], groups="conv_id", sequences="turn_idx"
+        ).add_step(StepAssembleContext(sel=all_of(["text"]), budget=6))
+
+    monkeypatch.setattr(skew, "AUTO_SKEW_ROLLING_SALT_ABOVE", 100)
+    rec = build()
+    rec.prep(auto_skew=True)
+    bucket = rec.steps[0].skew_bucket_size
+    assert bucket is not None and rec.steps[0]._auto_skew_assigned
+    path = str(tmp_path / "state.json")
+    rec.save_state(path)
+
+    reloaded = build().load_state(path)
+    step = reloaded.steps[0]
+    assert step.skew_bucket_size == bucket and step._auto_skew_assigned
+    reloaded.prep()
+    assert step.skew_bucket_size is None
+
+    reloaded = build().load_state(path)
+    reloaded.prep(frame(4), auto_skew=True)
+    assert reloaded.steps[0].skew_bucket_size is None
+
+
 def test_salted_family_keeps_null_group_rows(spark):
     """Review fix (round 5): every salted-plan join now matches NULL
     group keys via a struct key (_ns_join) — a NULL conv_id row used to
@@ -570,7 +637,7 @@ def test_salted_family_keeps_null_group_rows(spark):
 
     from recipys_spark.functions.skew import (
         salted_expanding,
-        salted_ffill,
+        salted_fill,
         salted_row_number,
     )
 
@@ -614,7 +681,7 @@ def test_salted_family_keeps_null_group_rows(spark):
     )
     assert null_rids == list(range(1, 41))
     # ffill carries across buckets inside the NULL group too
-    filled = salted_ffill(df, ["value"], ["conv_id"], "turn_idx", 8)
+    filled = salted_fill(df, ["value"], ["conv_id"], "turn_idx", 8, forward=True)
     fv = {
         (r["conv_id"], r["turn_idx"]): r["value"] for r in filled.collect()
     }
@@ -622,3 +689,44 @@ def test_salted_family_keeps_null_group_rows(spark):
     for i, v in enumerate(vals):
         last = v if v is not None else last
         assert fv[(None, i)] == (pytest.approx(last) if last is not None else None)
+
+
+@pytest.mark.parametrize("forward", [True, False])
+def test_salted_fill_null_sequence_rows_donate(spark, forward):
+    """Rows with a NULL sequence value sort first in the plain window,
+    so a value there fills forward into later buckets. The salted
+    edge donor is picked by the whole order key (a struct, never NULL),
+    so it no longer skips them: salted == plain both ways."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from recipys_spark.functions.skew import salted_fill
+
+    rows = [
+        ("g", None, 5.0, 0), ("g", 1, None, 1), ("g", 50, None, 2),
+        ("g", 120, 7.0, 3), ("g", 230, None, 4), ("h", None, None, 5),
+        ("h", 10, None, 6),
+    ]
+    schema = T.StructType(
+        [
+            T.StructField("g", T.StringType()),
+            T.StructField("s", T.LongType()),
+            T.StructField("v", T.DoubleType()),
+            T.StructField("id", T.LongType()),
+        ]
+    )
+    df = spark.createDataFrame(rows, schema)
+    frame = (
+        (Window.unboundedPreceding, Window.currentRow)
+        if forward
+        else (Window.currentRow, Window.unboundedFollowing)
+    )
+    w = Window.partitionBy("g").orderBy("s").rowsBetween(*frame)
+    pick = F.last if forward else F.first
+    plain = df.select("id", F.coalesce("v", pick("v", ignorenulls=True).over(w)).alias("v"))
+    salted = salted_fill(df, ["v"], ["g"], "s", 100, forward=forward)
+    want = {r["id"]: r["v"] for r in plain.collect()}
+    assert {r["id"]: r["v"] for r in salted.collect()} == want
+    if forward:
+        assert want[1] == 5.0  # donated by the NULL-sequence row
