@@ -281,6 +281,111 @@ def test_streaming_running_features_carry_across_batches(
     assert oracle[oracle.conv_id == "b"].value_max.max() == 7.0
 
 
+_TURNS_SCHEMA = "conv_id string, turn_idx int, value double"
+
+
+def _write_turn_files(d, files, first=0):
+    """One parquet file of (conv_id, turn_idx, value) rows per entry of
+    ``files``, with increasing mtimes: the file source orders by mtime."""
+    import os
+
+    import pandas as pd
+
+    d.mkdir(exist_ok=True)
+    for i, rows in enumerate(files, first):
+        f = d / f"part-{i}.parquet"
+        pd.DataFrame(rows, columns=["conv_id", "turn_idx", "value"]).astype(
+            {"turn_idx": "int32"}
+        ).to_parquet(f, index=False)
+        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
+def _running_features_query(spark, d, idle_timeout, sink, checkpoint=None):
+    """Running features over ``d``, one file per micro-batch, into the
+    ``foreachBatch`` ``sink`` under ``Trigger.AvailableNow``."""
+    stream = (
+        spark.readStream.schema(_TURNS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(d))
+    )
+    w = streaming_running_features(stream, idle_timeout=idle_timeout).writeStream
+    if checkpoint is not None:
+        w = w.option("checkpointLocation", str(checkpoint))
+    return w.foreachBatch(sink).trigger(availableNow=True).start()
+
+
+def _collect(frames):
+    return lambda df, _: frames.append(df.toPandas())
+
+
+@pytest.mark.parametrize("idle_timeout", [False, True])
+def test_streaming_running_features_carries_null_conv_id(
+    spark, tmp_path, idle_timeout
+):
+    """A NULL conv_id is one conversation whose state carries across
+    batches, as a NULL group does in batch StepHistorical."""
+    import pandas as pd
+
+    d = tmp_path / "turns"
+    _write_turn_files(
+        d,
+        [[(None, 0, 1.0), ("a", 0, 2.0), (None, 1, 5.0)],
+         [(None, 2, 3.0), ("a", 1, 4.0)]],
+    )
+    frames = []
+    with _conf(spark, _NO_DATA_BATCHES_OFF):
+        q = _running_features_query(spark, d, idle_timeout, _collect(frames))
+        assert q.awaitTermination(120)
+    out = pd.concat(frames, ignore_index=True)
+    null2 = out[out.conv_id.isna() & (out.turn_idx == 2)].iloc[0]
+    assert (null2.value_mean, null2.value_max, null2.value_count) == (3.0, 5.0, 3)
+    _assert_running_matches(
+        out, _running_oracle(spark.read.schema(_TURNS_SCHEMA).parquet(str(d)))
+    )
+
+
+def test_streaming_running_features_resume_under_other_shuffle_partitions(
+    spark, tmp_path
+):
+    """A checkpoint restarted under a different
+    ``spark.sql.shuffle.partitions`` keeps every conversation's state:
+    the state bucket of a conversation never depends on session conf."""
+    import pandas as pd
+
+    d, ckpt = tmp_path / "turns", tmp_path / "ckpt"
+    convs = [f"c{i}" for i in range(40)]
+    files = [[(c, t, float(i * 3 + t)) for i, c in enumerate(convs)] for t in (0, 1)]
+    frames = []
+    for i, partitions in enumerate(("4", "3")):
+        _write_turn_files(d, files[i:i + 1], first=i)
+        with _conf(spark, {"spark.sql.shuffle.partitions": partitions}):
+            q = _running_features_query(
+                spark, d, False, _collect(frames), checkpoint=ckpt
+            )
+            assert q.awaitTermination(120)
+    out = pd.concat(frames, ignore_index=True)
+    assert (out[out.turn_idx == 1].value_count == 2).all()
+    _assert_running_matches(
+        out, _running_oracle(spark.read.schema(_TURNS_SCHEMA).parquet(str(d)))
+    )
+
+
+def test_streaming_running_features_idle_timeout_ends_available_now(
+    spark, tmp_path
+):
+    """With the idle timeout armed and default confs (no-data
+    micro-batches on), ``Trigger.AvailableNow`` ends after the input."""
+    d = tmp_path / "turns"
+    _write_turn_files(d, [[("a", 0, 1.0), ("b", 0, 2.0), ("a", 1, 3.0)]])
+    frames = []
+    q = _running_features_query(spark, d, True, _collect(frames))
+    try:
+        assert q.awaitTermination(60)
+    finally:
+        q.stop()
+    assert sum(len(f) for f in frames) == 3
+
+
 def test_streaming_exact_dedup_matches_batch_fingerprints(spark, tmp_path_factory):
     """Streaming dedup keeps exactly one row per normalized-text
     fingerprint (within the watermark horizon), agreeing with batch
