@@ -848,24 +848,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # Kirsch–Mitzenmacher double-hash family whose every step has an
     # exact DuckDB mirror — the full LSH pipeline hash-matches; the
     # xxhash64 production family is pinned by pytest equivalence tests.
-    # vectorized=True: one Arrow numpy sweep per doc instead of 32
-    # interpreted transform/array_min passes over md5-conv structs —
-    # bit-identical signatures (pinned by tests), same DuckDB oracle.
-    # _fan_scan: the signature pandas_udf otherwise runs in ONE Python
-    # worker over the single-row-group scan (measured linear-in-rows at
-    # sf1.0 — a serial stage on a 32-core box)
+    # Signatures come from the Arrow MinHash UDF (one numpy sweep per
+    # doc; bit-identical to the expression mirror in
+    # tests/signature_mirrors.py). _fan_scan: the signature pandas_udf
+    # otherwise runs in ONE Python worker over the single-row-group
+    # scan (measured linear-in-rows at sf1.0 — a serial stage)
     q["dedup_minhash_lsh"] = lambda s, d: minhash_lsh_pairs(
         _fan_scan(s, _t(s, d, "documents"), "doc_id"),
         num_hashes=32, bands=4, threshold=0.8,
-        hash_family="md5", vectorized=True,
+        hash_family="md5",
     )
-    # vectorized=True: the Arrow simhash path (bit-identical to the
-    # expression mirror — pinned by tests/test_vectorized_signatures) —
-    # measured 7x faster at sf0.1 (4.38s -> 0.63s). md5 hash family →
-    # full DuckDB mirror.
+    # the Arrow SimHash UDF (bit-identical to the expression mirror in
+    # tests/signature_mirrors.py, 7x faster at sf0.1: 4.38 s -> 0.63 s);
+    # md5 hash family → full DuckDB mirror
     q["dedup_simhash"] = lambda s, d: simhash_clusters(
         _fan_scan(s, _t(s, d, "documents"), "doc_id"),
-        vectorized=True, hash_family="md5",
+        hash_family="md5",
     )
 
     # -- hypertable-style multi-grain rollup: ONE grouping-sets pass

@@ -1,12 +1,13 @@
 """Text-analysis expressions for large-scale training-data pipelines.
 
-All pure ``pyspark.sql.functions`` column expressions (JVM-side,
+Pure ``pyspark.sql.functions`` column expressions (JVM-side,
 whole-stage codegen — no Python in the hot path), each with an exact
 ANSI-SQL mirror used as the DuckDB oracle in ``__spark_entry__.py``.
+The one exception is ``simhash32_udf``, an Arrow pandas_udf.
 
 Covers: token counting (whitespace), punctuation/stopword ratios,
-quality scoring, n-gram-heuristic language ID, and md5 document
-fingerprinting over whitespace-normalized text.
+quality scoring, n-gram-heuristic language ID, md5 document
+fingerprinting over whitespace-normalized text, and 32-bit SimHash.
 """
 
 from __future__ import annotations
@@ -135,25 +136,20 @@ def fingerprint(col) -> "F.Column":
     return F.md5(normalized_text(col))
 
 
-def _token_hash_expr(t, hash_family: str):
-    """Per-token 64-bit hash column: xxhash64 (production) or the
-    60-bit md5 prefix (portable — exact DuckDB mirror, see
-    SQL_SIMHASH)."""
-    if hash_family == "xxhash64":
-        return F.xxhash64(t)
-    if hash_family != "md5":
-        raise ValueError("hash_family must be 'xxhash64' or 'md5'")
-    return F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long")
-
-
 def simhash32_udf(hash_family: str = "xxhash64"):
-    """Vectorized SimHash: Arrow-batched pandas_udf, BIT-IDENTICAL to
-    ``simhash32`` (integer arithmetic end-to-end; token hashes come
-    from the xxh64 Spark-parity port, memoized per worker since token
-    vocabularies are zipfian). Replaces 32 interpreted F.aggregate
-    passes per row with one numpy bit-matrix reduction per document —
-    the production path; the expression form remains the in-plan
-    mirror for small scans."""
+    """32-bit SimHash over whitespace tokens as an Arrow-batched
+    pandas_udf. Each distinct token of ``tokens(col)`` hashes once
+    (xxhash64, or the 60-bit md5 prefix for the SQL-mirrorable
+    ``hash_family="md5"``); bit i of the signature is 1 iff the sum over
+    tokens of ±1 (by the token hash's bit i) is positive, so
+    near-duplicates differ in few bits.
+
+    Integer arithmetic end to end, with token hashes from the xxh64
+    Spark-parity port (memoized per worker: token vocabularies are
+    zipfian). It is BIT-IDENTICAL to a 32-pass ``F.aggregate``
+    expression over Spark's own hashes; that expression is kept as
+    the reference in tests/signature_mirrors.py, and measured 7× slower
+    on the dedup_simhash query at sf0.1 (4.38 s vs 0.63 s)."""
     import re
 
     import numpy as np
@@ -168,7 +164,7 @@ def simhash32_udf(hash_family: str = "xxhash64"):
     # mirror tokens() EXACTLY: Spark trim strips ' ' ONLY (SQL TRIM,
     # not Java String.trim), and Java regex \s is ASCII — Python's
     # unicode \s / str.strip() diverge on tab-padded or NBSP text,
-    # silently breaking bit-parity with the expression form
+    # silently breaking bit-parity with Spark's tokenizer
     ws = re.compile(r"\s+", re.ASCII)
     shifts = np.arange(32, dtype=np.int64)
     bitvals = (np.int64(1) << shifts)
@@ -179,8 +175,7 @@ def simhash32_udf(hash_family: str = "xxhash64"):
         out = np.zeros(len(texts), dtype=np.int64)
         for j, txt in enumerate(texts):
             if txt is None:
-                # the expression form's when(...).otherwise(0) absorbs
-                # the null bit-sums, so NULL text hashes to 0 — mirror it
+                # NULL text hashes to 0 (no token votes for any bit)
                 continue
             toks = dict.fromkeys(ws.split(txt.lower().strip(" ")))  # distinct, ordered
             h = np.fromiter(
@@ -192,31 +187,6 @@ def simhash32_udf(hash_family: str = "xxhash64"):
         return pd.Series(out)
 
     return sh
-
-
-def simhash32(col, hash_family: str = "xxhash64") -> "F.Column":
-    """32-bit SimHash over whitespace tokens, fully JVM-side.
-
-    Each distinct token hashes once (xxhash64, or the 60-bit md5
-    prefix for the SQL-mirrorable ``hash_family="md5"``); bit i of the
-    signature is 1 iff the sum over tokens of ±1 (by the token-hash's
-    bit i) is positive. Near-duplicates differ in few bits (small
-    Hamming distance)."""
-    toks = F.array_distinct(tokens(col))
-    out = F.lit(0).cast("long")
-    for i in range(32):
-        bit_sum = F.aggregate(
-            toks,
-            F.lit(0),
-            lambda acc, t: acc
-            + F.when(
-                F.shiftright(_token_hash_expr(t, hash_family), i).bitwiseAND(F.lit(1))
-                == 1,
-                1,
-            ).otherwise(-1),
-        )
-        out = out + F.when(bit_sum > 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return out
 
 
 # -- SQL mirrors (DuckDB oracles) ----------------------------------------

@@ -1,18 +1,21 @@
 """Pure-Python reimplementation of Spark's ``xxhash64`` expression.
 
-Why this exists: the LSH / SimHash / IVF signature paths derive their
-randomness from ``F.xxhash64`` so signatures are reproducible on any
-cluster with no side data. The JVM expression forms are the measured
-win at sandbox dims but collapse at production dims (a 64-plane ×
-768-dim hyperplane signature is ~10^5 interpreted expression nodes per
-row; simhash is 32 interpreted aggregate passes per row). The
-vectorized pandas_udf alternatives need the SAME hash values to stay
-bit-identical to the expression mirrors — so this module ports the
-exact algorithm (xxHash64 as Spark implements it in
-catalyst XXH64: 8-byte-block little-endian stripes, 4-byte chunk,
-byte tail, seed 42) and is pinned by tests against live
-``F.xxhash64`` output for longs, chained longs, ints, and UTF-8
-strings including the >=32-byte block path.
+Why this exists: the MinHash / SimHash / hyperplane-LSH signatures
+derive their randomness from xxhash64, so signatures are reproducible
+on any cluster with no side data and agree with ``F.xxhash64``.
+MinHash and SimHash are computed only in Arrow pandas_udfs
+(``dedup.minhash_signature_udf``, ``text.simhash32_udf``): the
+equivalent JVM expressions are num_hashes or 32 interpreted
+higher-order passes per row. The hyperplane signature is a JVM
+expression below ``similarity.VECTORIZE_EXPR_NODES`` and a UDF above
+it (a 64-plane × 768-dim signature is ~10^5 expression nodes per row).
+Every UDF needs the SAME hash values as Spark — so this module ports
+the exact algorithm (xxHash64 as Spark implements it in catalyst
+XXH64: 8-byte-block little-endian stripes, 4-byte chunk, byte tail,
+seed 42) and is pinned by tests against live ``F.xxhash64`` output for
+longs, chained longs, ints, and UTF-8 strings including the >=32-byte
+block path; the MinHash/SimHash expression references live in
+tests/signature_mirrors.py.
 
 Scope: only the input types the engine uses — LongType (and chains of
 longs, Spark folds multi-arg xxhash64 by re-seeding with the previous

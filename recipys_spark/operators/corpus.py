@@ -81,7 +81,6 @@ def clean_corpus(
     threshold: float = 0.8,
     hash_family: str = "xxhash64",
     connected: bool = True,
-    vectorized: bool = True,
     seed: int = 42,
 ) -> DataFrame:
     """Clean a document corpus: quality/length/language filter, exact
@@ -148,7 +147,6 @@ def clean_corpus(
         seed=seed,
         link="star",
         hash_family=hash_family,
-        vectorized=vectorized,
     )
     if connected:
         comps = connected_components(edges)

@@ -1,21 +1,30 @@
 """Deduplication operators for training-data pipelines.
 
-Four tiers, each a lazy DataFrame transform designed for 100 TB inputs:
+Each tier is a lazy DataFrame transform designed for 100 TB inputs:
 
-- ``exact_dedup``: hash-groupBy on a whitespace-normalized md5
+- ``exact_dedup``: one window on a whitespace-normalized md5
   fingerprint; one shuffle on the fingerprint, keeps the min-id row per
   group (deterministic winner).
 - ``jaccard_pairs``: blocked exact token-set Jaccard — self-join inside
   small blocks (language by default). Quadratic *within a block only*;
   the oracle-checkable ground truth for the approximate tiers.
-- ``minhash_lsh_pairs``: MinHash signatures (xxhash64 per seed, all
-  JVM-side) → banded LSH bucketing → candidates from equal band keys →
+- ``minhash_lsh_pairs``: MinHash signatures (one Arrow pandas_udf,
+  ``minhash_signature_udf``; xxhash64 per seed or the portable md5
+  family) → banded LSH bucketing → candidates from equal band keys →
   exact Jaccard verification. The scale path: shuffle is on band keys,
-  never all-pairs.
-- ``simhash_pairs``: 32-bit SimHash bucketing (exact-signature match)
-  for fast near-exact duplicate clusters.
-- ``embedding_neardup_pairs``: cosine-similarity near-duplicates over an
-  embedding column; brute blocked variant (see similarity.py for ANN).
+  never all-pairs. ``minhash_dedup`` labels clusters from its edges
+  through ``connected_components``.
+- ``simhash_clusters``: 32-bit SimHash (Arrow pandas_udf,
+  ``functions/text.simhash32_udf``) grouped by exact signature, for
+  fast near-exact duplicate clusters.
+- ``embedding_neardup_lsh`` / ``embedding_neardup_pairs``:
+  cosine-similarity near-duplicates over an embedding column, bucketed
+  by hyperplane signature or brute within blocks (see similarity.py
+  for ANN).
+
+The signature UDFs are bit-identical to JVM expressions over Spark's
+own hashes; those expressions are kept as test references in
+tests/signature_mirrors.py.
 """
 
 from __future__ import annotations
@@ -25,7 +34,12 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from recipys_spark.functions.text import char_shingles, fingerprint, simhash32, tokens
+from recipys_spark.functions.text import (
+    char_shingles,
+    fingerprint,
+    simhash32_udf,
+    tokens,
+)
 from recipys_spark.functions.worker import ready
 
 
@@ -111,68 +125,32 @@ def jaccard_pairs(
 KM_PRIME = 2147483647  # 2^31 - 1: products with i < num_hashes stay in int64
 
 
-def minhash_signature(toks_col, num_hashes: int, seed: int = 42,
-                      hash_family: str = "xxhash64"):
-    """Array of num_hashes MinHash values over a token array column.
-
-    ``hash_family``:
-    - ``"xxhash64"`` (default): one JVM xxhash64 per (token, seed+i) —
-      the production path.
-    - ``"md5"``: Kirsch–Mitzenmacher double hashing h_i = (h1 + i·h2)
-      mod KM_PRIME where h1/h2 are the two 60-bit halves of the
-      token's md5 — every operation has an exact ANSI-SQL mirror, so
-      the whole MinHash+LSH pipeline becomes DuckDB-verifiable
-      (hash-match oracle). Same independence guarantees for LSH
-      banding (Kirsch & Mitzenmacher 2006); one md5 per token instead
-      of num_hashes xxhash64 calls.
-    """
-    if hash_family == "xxhash64":
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(toks_col, lambda t: F.xxhash64(t, F.lit(seed + i)))
-                )
-                for i in range(num_hashes)
-            ]
-        )
-    if hash_family != "md5":
-        raise ValueError("hash_family must be 'xxhash64' or 'md5'")
-    p = F.lit(KM_PRIME)
-    # nested transform: md5 evaluated ONCE per token, then both 60-bit
-    # halves parsed from the hex
-    pairs = F.transform(
-        F.transform(toks_col, lambda t: F.md5(t)),
-        lambda h: F.struct(
-            (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % p).alias("a"),
-            (F.conv(F.substring(h, 16, 15), 16, 10).cast("long") % p).alias("b"),
-        ),
-    )
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(pairs, lambda s: (s["a"] + F.lit(i) * s["b"]) % p)
-            )
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_signature_udf(
     num_hashes: int, seed: int = 42, hash_family: str = "xxhash64"
 ):
-    """Arrow-vectorized MinHash signatures, BIT-IDENTICAL to
-    ``minhash_signature`` (pure integer arithmetic; xxhash64 comes
-    from the pinned Spark-parity port, md5 halves from hashlib —
-    both memoized, token vocabularies are zipfian).
+    """MinHash signatures of a token-array column as an Arrow
+    pandas_udf: ``num_hashes`` minima per document, NULL for an empty
+    array.
 
-    The expression form runs ``num_hashes`` interpreted higher-order
-    ``transform``/``array_min`` passes per document — for the md5
-    family each pass re-walks a struct array built from interpreted
-    ``conv(substring(md5(...)))`` calls, the expression class measured
-    ~10× slower than codegen. Here each token hashes ONCE per batch
-    (cached across batches) and the (h1 + i·h2) mod p sweep is one
-    numpy broadcast. Exact parity: a, b < 2³¹, i < num_hashes ⇒
-    products < 2³⁷, no int64 overflow."""
+    ``hash_family``:
+    - ``"xxhash64"`` (default): xxhash64(token, seed+i) for slot i,
+      from the pinned Spark-parity port.
+    - ``"md5"``: Kirsch–Mitzenmacher double hashing h_i = (h1 + i·h2)
+      mod KM_PRIME where h1/h2 are the two 60-bit halves of the
+      token's md5 — every operation has an exact ANSI-SQL mirror, so
+      the whole MinHash+LSH pipeline is DuckDB-verifiable. Same
+      independence guarantees for LSH banding (Kirsch & Mitzenmacher
+      2006); one md5 per token instead of num_hashes hashes.
+
+    Pure integer arithmetic, BIT-IDENTICAL to the JVM-expression form
+    kept in tests/signature_mirrors.py. That form runs ``num_hashes``
+    interpreted ``transform``/``array_min`` passes per document (for
+    md5 over interpreted ``conv(substring(md5(...)))`` structs;
+    8.3 s → 2.9 s at sf0.1 for the LSH pipeline). Here each token
+    hashes once per worker (memoized, token vocabularies are zipfian)
+    and the (h1 + i·h2) mod p sweep is one numpy broadcast. Exact
+    parity: a, b < 2³¹, i < num_hashes ⇒ products < 2³⁷, no int64
+    overflow."""
     import numpy as np
 
     from recipys_spark.functions.xxh64 import (
@@ -223,8 +201,7 @@ def minhash_signature_udf(
         out = []
         for arr in toks:
             if arr is None or len(arr) == 0:
-                # mirror the expression form: array_min over an empty
-                # transform is NULL per slot (callers filter empties)
+                # no tokens, no minimum: NULL (callers filter empties)
                 out.append(None)
                 continue
             vals = np.stack([_tok_row(t) for t in arr])
@@ -245,8 +222,6 @@ def minhash_lsh_pairs(
     link: str = "star",
     shingle: "int | None" = None,
     hash_family: str = "xxhash64",
-    vectorized: bool = False,
-    materialize_tokens: bool = True,
 ) -> DataFrame:
     """MinHash + banded LSH near-duplicate pairs, Jaccard-verified;
     ``shingle=n`` switches the comparison unit from word tokens to
@@ -275,22 +250,12 @@ def minhash_lsh_pairs(
     docs = _token_sets(df, text_col, id_col, [], shingle).where(
         F.size("__toks") > 0
     )
-    if materialize_tokens:
-        # the token-set frame is referenced THREE times (signatures +
-        # both Jaccard-verify joins); a lazy localCheckpoint barrier
-        # computes the upstream scan+tokenization once instead of three
-        # times (the corpus_curate_full stage-barrier pattern). Pass
-        # False to trade recompute for storage when materializing
-        # (id, tokens) for the whole corpus is too large to hold.
-        docs = docs.localCheckpoint(eager=False)
-    if vectorized:
-        sig_col = minhash_signature_udf(num_hashes, seed, hash_family)(
-            F.col("__toks")
-        )
-    else:
-        sig_col = minhash_signature(
-            F.col("__toks"), num_hashes, seed, hash_family=hash_family
-        )
+    # the token-set frame is referenced THREE times (signatures + both
+    # Jaccard-verify joins); a lazy localCheckpoint barrier computes the
+    # upstream scan+tokenization once instead of three times (the
+    # corpus_curate_full stage-barrier pattern)
+    docs = docs.localCheckpoint(eager=False)
+    sig_col = minhash_signature_udf(num_hashes, seed, hash_family)(F.col("__toks"))
     sig = docs.select(id_col, "__toks", sig_col.alias("__sig"))
 
     def band_key(b):
@@ -425,7 +390,6 @@ def minhash_dedup(
     seed: int = 42,
     connected: bool = True,
     hash_family: str = "xxhash64",
-    vectorized: bool = False,
 ) -> DataFrame:
     """Per-doc near-dup labels: (id, cluster_id, is_duplicate).
 
@@ -437,7 +401,7 @@ def minhash_dedup(
     hub; chains keep distinct hubs)."""
     edges = minhash_lsh_pairs(
         df, text_col, id_col, num_hashes, bands, threshold, seed, link="star",
-        hash_family=hash_family, vectorized=vectorized,
+        hash_family=hash_family,
     )
     if connected:
         comps = connected_components(edges)
@@ -463,23 +427,15 @@ def simhash_clusters(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    vectorized: bool = False,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
-    """Group docs by identical 32-bit SimHash; emit cluster ids for
+    """Group docs by identical 32-bit SimHash; emit (id, simhash) for
     clusters of size > 1 (near-exact duplicates).
 
-    ``vectorized=True`` computes signatures in the Arrow pandas_udf
-    (bit-identical — see functions/text.py simhash32_udf) instead of
-    the 32-interpreted-aggregate-passes expression form; it is the
-    production default for wide scans, kept opt-in here so the driver
-    query exercises the in-plan mirror."""
-    if vectorized:
-        from recipys_spark.functions.text import simhash32_udf
-
-        sig = simhash32_udf(hash_family)(F.col(text_col))
-    else:
-        sig = simhash32(F.col(text_col), hash_family)
+    Signatures come from the Arrow pandas_udf ``simhash32_udf``
+    (functions/text.py); ``hash_family="md5"`` is the DuckDB-mirrorable
+    family."""
+    sig = simhash32_udf(hash_family)(F.col(text_col))
     # NULL text is unknown, not a duplicate (same rule as exact_dedup):
     # without the filter every NULL doc gets signature 0 and they all
     # cluster together (and with any legitimately-zero-signature doc)

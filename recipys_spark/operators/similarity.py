@@ -204,13 +204,21 @@ def cosine_topk(
 
 
 # Above this many expression nodes (planes×dim or centroids×dim), the
-# interpreted-HOF / literal-chain signature forms stop being the
-# measured win: plan construction goes superlinear and codegen hits the
-# JVM 64KB method limit. The vectorized pandas_udf paths (broadcast
-# numpy matrix, Arrow batches) take over — signatures stay
-# BIT-IDENTICAL because the ±1 weights come from the same xxhash64
-# (functions/xxh64.py is pinned against F.xxhash64 output).
+# unrolled / literal-chain signature forms stop being the measured win:
+# plan construction goes superlinear and codegen hits the JVM 64KB
+# method limit. The pandas_udf paths (broadcast numpy matrix, Arrow
+# batches) take over — signatures stay BIT-IDENTICAL because the ±1
+# weights come from the same xxhash64 (functions/xxh64.py is pinned
+# against F.xxhash64 output). Below it the expression forms win (the
+# literal-chain IVF assignment measured ~10× faster at sandbox dims).
 VECTORIZE_EXPR_NODES = 4096
+
+
+def _vectorize(rows: int, dim: int) -> bool:
+    """The input-size gate of the LSH and IVF tiers: Arrow UDFs for a
+    ``rows × dim`` weight matrix at or above VECTORIZE_EXPR_NODES,
+    JVM expressions below it."""
+    return rows * dim >= VECTORIZE_EXPR_NODES
 
 
 def hyperplane_weights(n_planes: int, dim: int, seed: int = 42):
@@ -317,7 +325,6 @@ def recommend_lsh_params(
     corpus_rows: int,
     dim: int,
     target_bucket_rows: int = 4_000,
-    target_recall_tables: bool = True,
 ) -> dict:
     """Executable form of the sizing guidance in ``lsh_cosine_topk``'s
     docstring (the advisor mirror of skew.recommend_skew_bucket_size —
@@ -330,11 +337,9 @@ def recommend_lsh_params(
     - ``n_tables``: the OR-construction that buys back the recall the
       extra planes cost — 1 below 12 planes, then +1 per ~4 planes,
       capped at 8 (candidate volume grows linearly with it).
-    - ``vectorized``: the planes×dim node-count gate, precomputed.
 
-    Returns {"n_planes", "n_tables", "vectorized",
-    "expected_bucket_rows"} — splat into ``lsh_cosine_topk(**params)``
-    or read fields individually. Threaded automatically when
+    Returns {"n_planes", "n_tables", "expected_bucket_rows"}; pass the
+    first two to ``lsh_cosine_topk``. Threaded automatically when
     ``lsh_cosine_topk(n_planes=None)``."""
     import math
 
@@ -344,11 +349,10 @@ def recommend_lsh_params(
         raise ValueError("target_bucket_rows must be >= 1")
     ratio = max(corpus_rows, 1) / target_bucket_rows
     n_planes = min(62, max(4, math.ceil(math.log2(ratio)) if ratio > 1 else 4))
-    n_tables = min(8, max(1, 1 + max(0, n_planes - 12) // 4)) if target_recall_tables else 1
+    n_tables = min(8, max(1, 1 + max(0, n_planes - 12) // 4))
     return {
         "n_planes": n_planes,
         "n_tables": n_tables,
-        "vectorized": n_planes * dim >= VECTORIZE_EXPR_NODES,
         "expected_bucket_rows": max(1, corpus_rows >> n_planes),
     }
 
@@ -364,7 +368,6 @@ def lsh_cosine_topk(
     multiprobe: bool = True,
     seed: int = 42,
     n_tables: Optional[int] = None,
-    vectorized: Optional[bool] = None,
     weights=None,
 ) -> DataFrame:
     """Bucketed ANN: join queries to corpus rows sharing a hyperplane
@@ -386,10 +389,11 @@ def lsh_cosine_topk(
       recall ≈ 1-(1-p^n_planes)^n_tables per neighbor. Raise n_tables
       (2–8) to recover the recall that extra planes cost; candidate
       volume grows linearly with it, never quadratically.
-    - ``vectorized``: None (default) auto-selects — the interpreted
-      expression form below VECTORIZE_EXPR_NODES ≈ planes×dim nodes,
-      the broadcast-numpy pandas_udf above it (production dims). Both
-      derive weights from the same xxhash64, so buckets agree.
+
+    Signatures and rescoring run as unrolled JVM expressions below
+    VECTORIZE_EXPR_NODES planes×dim nodes, and as broadcast-numpy
+    pandas_udfs at or above it (production dims). Both derive weights
+    from the same xxhash64, so buckets agree.
     """
     if n_tables is not None and n_tables < 1:
         raise ValueError("n_tables must be >= 1")
@@ -402,8 +406,6 @@ def lsh_cosine_topk(
         n_planes = params["n_planes"]
         if n_tables is None and weights is None:
             n_tables = params["n_tables"]
-        if vectorized is None:
-            vectorized = params["vectorized"]
     if n_tables is None:
         n_tables = 1
     if weights is not None:
@@ -411,8 +413,7 @@ def lsh_cosine_topk(
         if n_tables != 1:
             raise ValueError("explicit weights imply n_tables=1")
         n_planes, dim = len(weights), len(weights[0])
-    if vectorized is None:
-        vectorized = n_planes * dim >= VECTORIZE_EXPR_NODES
+    vectorized = _vectorize(n_planes, dim)
     table_seeds = [seed + 7919 * t for t in range(n_tables)]
 
     def with_buckets(df, id_alias, vec_alias, probe: bool):
@@ -572,7 +573,6 @@ def ivf_cosine_topk(
     nprobe: int = 2,
     centroids: Optional[list] = None,
     sample_rows: int = 100_000,
-    vectorized: Optional[bool] = None,
 ) -> DataFrame:
     """IVF ANN: assign every corpus vector to its nearest centroid cell
     (argmax dot — one JVM expression over broadcast-by-value literal
@@ -585,12 +585,12 @@ def ivf_cosine_topk(
     ``centroids`` to reuse a trained index across queries (the fitted
     state is a plain list — save/restore friendly).
 
-    ``vectorized=None`` auto-selects the assignment strategy: literal
-    multiply-add chains below VECTORIZE_EXPR_NODES ≈ centroids×dim
-    expression nodes (the measured ~10× win at sandbox dims), the
-    broadcast-numpy pandas_udf above (literal chains at production
-    dims — 4096 centroids × 768 dims ≈ 3M nodes — blow up plan
-    construction and the JVM 64KB codegen method limit)."""
+    Cell assignment and rescoring are literal multiply-add chains below
+    VECTORIZE_EXPR_NODES centroids×dim expression nodes (the measured
+    ~10× win at sandbox dims), and broadcast-numpy pandas_udfs at or
+    above it (literal chains at production dims — 4096 centroids × 768
+    dims ≈ 3M nodes — blow up plan construction and the JVM 64KB
+    codegen method limit)."""
     if centroids is None:
         centroids = train_ivf_centroids(
             corpus, n_centroids, emb_col, sample_rows=sample_rows
@@ -598,8 +598,7 @@ def ivf_cosine_topk(
     n_centroids = len(centroids)
     if not 1 <= nprobe <= n_centroids:
         raise ValueError("nprobe must be in [1, n_centroids]")
-    if vectorized is None:
-        vectorized = n_centroids * len(centroids[0]) >= VECTORIZE_EXPR_NODES
+    vectorized = _vectorize(n_centroids, len(centroids[0]))
 
     def dots(col):
         # corpus/query vectors are not pre-normalized; centroids are

@@ -2,12 +2,14 @@
 query into PLANS.md — the 'is this the plan you'd want at 100×?' check,
 kept under version control so regressions show up in diffs.
 
-Checks per query:
+Checks per query (node names are matched whole, at the start of each
+plan line):
 - Exchange count (shuffles — the scale currency)
 - WindowExec count (each is a per-key sort-and-run stage)
 - whole-stage codegen coverage (codegen'd spans vs interpreted)
 - parquet PushedFilters / ReadSchema pruning (scan-level pushdown)
-- Python escape hatches (ArrowEvalPython / FlatMapGroupsInPandas)
+- Python escape hatches (every node whose name says Python, Pandas or
+  Arrow: ArrowEvalPython, MapInArrow, FlatMapGroupsInPandas, ...)
 - BroadcastHashJoin vs SortMergeJoin choices
 """
 
@@ -19,21 +21,43 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entrymod
-from bench import HEADLINE
-from recipys_spark.sources.io import get_spark
+#: node names of the operators that run Python workers (ArrowEvalPython,
+#: MapInArrow, FlatMapGroupsInPandas, ArrowWindowPython, ...)
+_PY_NODE = re.compile(r"Python|Pandas|Arrow")
+
+# one plan line: tree drawing ("+- ", ":  "), an optional "!" marker
+# and codegen stage "*(n) ", then the node name
+_NODE_LINE = re.compile(r"^[\s:+|-]*!?(?:\*\(\d+\)\s+)?([A-Za-z]\w*)(.*)$")
+
+
+def plan_nodes(plan: str) -> list[tuple[str, str]]:
+    """(node name, rest of line) for every node of a physical-plan
+    string, read from the start of each line — so ``Window`` never
+    matches ``WindowGroupLimit`` and an expression that mentions a node
+    name inside brackets is never counted."""
+    out = []
+    for line in plan.splitlines():
+        m = _NODE_LINE.match(line)
+        if m:
+            out.append((m.group(1), m.group(2)))
+    return out
 
 
 def audit(plan: str) -> dict:
+    nodes = plan_nodes(plan)
+    names = [n for n, _ in nodes]
     return {
-        "exchanges": len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)", plan)),
-        "windows": plan.count("Window"),
+        "exchanges": sum(
+            1
+            for n, rest in nodes
+            if n == "Exchange"
+            and re.match(r"\s*(?:hashpartitioning|rangepartitioning|SinglePartition)", rest)
+        ),
+        "windows": names.count("Window"),
         "codegen_spans": len(set(re.findall(r"\*\((\d+)\)", plan))),
-        "bhj": plan.count("BroadcastHashJoin"),
-        "smj": plan.count("SortMergeJoin"),
-        "python": plan.count("ArrowEvalPython")
-        + plan.count("FlatMapGroupsInPandas")
-        + plan.count("MapInPandas"),
+        "bhj": names.count("BroadcastHashJoin"),
+        "smj": names.count("SortMergeJoin"),
+        "python": sum(1 for n in names if _PY_NODE.search(n)),
         "pushed": re.search(r"PushedFilters: \[[^\]]", plan) is not None,
     }
 
@@ -81,6 +105,10 @@ def _shuffle_bytes_written(spark) -> float:
 
 
 def main() -> None:
+    import __spark_entry__ as entrymod
+    from bench import HEADLINE
+    from recipys_spark.sources.io import get_spark
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     bytes_sf_dir = os.environ.get("SPARK_GRAFT_BYTES_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(parallelism=8, shuffle_partitions=8, app_name="plan_audit")

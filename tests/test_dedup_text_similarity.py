@@ -604,7 +604,8 @@ def test_simhash_udf_parity_on_exotic_whitespace(spark):
     spaces only; Java \\s is ASCII)."""
     from pyspark.sql import functions as F
 
-    from recipys_spark.functions.text import simhash32, simhash32_udf
+    from recipys_spark.functions.text import simhash32_udf
+    from tests.signature_mirrors import simhash32
 
     texts = [
         "\thello world\n",

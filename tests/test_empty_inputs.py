@@ -33,7 +33,8 @@ def empty_events(spark):
     return spark.createDataFrame([], schema)
 
 
-def test_dedup_ops_on_empty(spark, empty_docs):
+def test_dedup_ops_on_empty(spark, empty_docs, monkeypatch):
+    from recipys_spark.operators import dedup
     from recipys_spark.operators.dedup import (
         exact_dedup,
         jaccard_pairs,
@@ -41,11 +42,14 @@ def test_dedup_ops_on_empty(spark, empty_docs):
         minhash_lsh_pairs,
         simhash_clusters,
     )
+    from tests.signature_mirrors import minhash_mirror_udf
 
     assert exact_dedup(empty_docs).count() == 0
     assert jaccard_pairs(empty_docs).count() == 0
     assert minhash_lsh_pairs(empty_docs).count() == 0
-    assert minhash_lsh_pairs(empty_docs, vectorized=True).count() == 0
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "minhash_signature_udf", minhash_mirror_udf)
+        assert minhash_lsh_pairs(empty_docs).count() == 0
     assert simhash_clusters(empty_docs).count() == 0
     lab = minhash_dedup(empty_docs)
     assert lab.count() == 0 and set(lab.columns) == {

@@ -10,7 +10,9 @@ These tests inspect ``explain`` output rather than results:
 - broadcast: the as-of broadcast strategy must plan a
   BroadcastHashJoin / BroadcastNestedLoopJoin, not a sort-merge join;
 - worker start: every function the package ships to Python workers
-  calls ``functions.worker.ready()`` first (an AST walk, no Spark).
+  calls ``functions.worker.ready()`` first (an AST walk, no Spark);
+- knobs: the package reads no tuning environment variable, and no
+  public operator takes a kernel switch (signature walks, no Spark).
 """
 
 import ast
@@ -411,4 +413,59 @@ def test_no_env_knobs():
                 for line, name in _env_reads(tree)
                 if name not in allowed
             ]
+    assert not bad, "\n".join(bad)
+
+
+#: parameters that pick between two bit-identical kernels or toggle an
+#: option no caller sets; the library keeps one kernel per semantic
+#: (input-size gates are module constants, e.g.
+#: similarity.VECTORIZE_EXPR_NODES)
+_KERNEL_SWITCHES = {"vectorized", "materialize_tokens", "target_recall_tables"}
+
+
+def _public_callables(pkg):
+    """(qualified name, callable) for every public function, class and
+    class method defined in ``pkg`` and its submodules."""
+    import importlib
+    import inspect
+    import pkgutil
+
+    mods = [pkg] + [
+        importlib.import_module(f"{pkg.__name__}.{m.name}")
+        for m in pkgutil.iter_modules(pkg.__path__)
+    ]
+    seen = set()
+    for mod in mods:
+        for name, obj in vars(mod).items():
+            if name.startswith("_") or not callable(obj) or id(obj) in seen:
+                continue
+            if not getattr(obj, "__module__", "").startswith("recipys_spark"):
+                continue
+            seen.add(id(obj))
+            yield f"{obj.__module__}.{name}", obj
+            if inspect.isclass(obj):
+                for meth, fn in vars(obj).items():
+                    if not meth.startswith("_") and inspect.isfunction(fn):
+                        yield f"{obj.__module__}.{name}.{meth}", fn
+
+
+def test_no_kernel_switch_knobs():
+    """No public operator or function takes a user-set kernel switch:
+    MinHash and SimHash have one kernel each, and the LSH/IVF tiers
+    choose theirs from input size alone."""
+    import inspect
+
+    import recipys_spark.functions
+    import recipys_spark.operators
+
+    bad, n = [], 0
+    for pkg in (recipys_spark.operators, recipys_spark.functions):
+        for qual, obj in _public_callables(pkg):
+            try:
+                params = inspect.signature(obj).parameters
+            except (TypeError, ValueError):
+                continue
+            n += 1
+            bad += [f"{qual}({p}=)" for p in params if p in _KERNEL_SWITCHES]
+    assert n > 100, f"the walk found only {n} callables"
     assert not bad, "\n".join(bad)

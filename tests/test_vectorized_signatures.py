@@ -1,11 +1,15 @@
-"""Size-gated vectorized signature paths (LSH / IVF / SimHash).
+"""Arrow signature kernels against their JVM-expression twins.
 
-The expression forms (interpreted HOFs, literal multiply-add chains)
-are the measured win at sandbox dims but collapse at production dims
-(plan construction + the JVM 64KB codegen limit). The pandas_udf paths
-must be BIT-IDENTICAL where arithmetic is exact: the ±1 weights and
-token hashes derive from the same xxhash64 via the Spark-parity port
-in functions/xxh64.py, pinned here against live F.xxhash64 output.
+MinHash and SimHash run only as Arrow pandas_udfs; their expression
+forms live in tests/signature_mirrors.py as the bit-identity reference,
+and the end-to-end comparisons monkeypatch a mirror over the library
+UDF. The LSH / IVF tiers keep both forms behind one input-size gate
+(``similarity.VECTORIZE_EXPR_NODES``: expression forms win at sandbox
+dims, collapse at production dims); tests force a side by patching
+that constant. Where arithmetic is exact the two forms must be
+BIT-IDENTICAL: the ±1 weights and token hashes derive from the same
+xxhash64 via the Spark-parity port in functions/xxh64.py, pinned here
+against live F.xxhash64 output.
 """
 
 import time
@@ -16,7 +20,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from recipys_spark.functions import xxh64
-from recipys_spark.functions.text import simhash32, simhash32_udf
+from recipys_spark.functions.text import simhash32_udf
+from recipys_spark.operators import dedup, similarity
 from recipys_spark.operators.dedup import simhash_clusters
 from recipys_spark.operators.similarity import (
     VECTORIZE_EXPR_NODES,
@@ -26,6 +31,35 @@ from recipys_spark.operators.similarity import (
     ivf_cosine_topk,
     lsh_cosine_topk,
 )
+from tests.signature_mirrors import (
+    minhash_mirror_udf,
+    minhash_signature,
+    simhash32,
+    simhash32_mirror_udf,
+)
+
+#: Unicode edge cases of Spark's lower/trim/ASCII-\s tokenizer, placed
+#: between tokens: dotted capital I (lowercases to two code points),
+#: Greek final sigma, capital sharp s, a titlecase digraph, NBSP,
+#: LINE SEPARATOR and NEL (the last three are not Java \s, so they
+#: stay inside their token)
+UNICODE_EDGE_TEXTS = [
+    "İstanbul İ ok",
+    "ΟΔΟΣ ΟΔΟΣ σ Σ",
+    "STRAẞE ẞ groß",
+    "ǅemal ǅ ǆ",
+    "nbsp\u00a0joined tokens",
+    "line\u2028sep tokens",
+    "next\u0085line tokens",
+]
+
+
+def _force_udf(monkeypatch, udf: bool):
+    """Pin the LSH/IVF size gate to one side: every weight matrix is
+    at or above the threshold (UDFs), or none is (expressions)."""
+    monkeypatch.setattr(
+        similarity, "VECTORIZE_EXPR_NODES", 0 if udf else float("inf")
+    )
 
 
 def test_xxh64_port_matches_spark(spark):
@@ -56,7 +90,7 @@ def test_simhash_udf_bit_identical(spark):
         "the quick brown fox", "the the the quick", "", "   ",
         "naïve café déjà-vu", "one", "a b c d e f g h i j k l m n o p",
         None,
-    ]
+    ] + UNICODE_EDGE_TEXTS
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
@@ -73,10 +107,11 @@ def test_simhash_udf_bit_identical(spark):
         assert r["expr"] == r["vec"], r
 
 
-def test_simhash_clusters_vectorized_equals_expression(spark):
+def test_simhash_clusters_vectorized_equals_expression(spark, monkeypatch):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    b = simhash_clusters(docs).orderBy("doc_id").collect()
+    monkeypatch.setattr(dedup, "simhash32_udf", simhash32_mirror_udf)
     a = simhash_clusters(docs).orderBy("doc_id").collect()
-    b = simhash_clusters(docs, vectorized=True).orderBy("doc_id").collect()
     assert a == b and len(a) > 0
 
 
@@ -131,17 +166,19 @@ def test_hyperplane_weights_match_expression_derivation(spark):
             assert w[p, i] == rows[f"w_{p}_{i}"]
 
 
-def test_lsh_vectorized_equals_expression(spark):
+def test_lsh_vectorized_equals_expression(spark, monkeypatch):
     df = _int_embeddings(spark, 300, 16)
     kw = dict(k=5, n_planes=6, dim=16, n_tables=2)
-    a = lsh_cosine_topk(df, df, vectorized=False, **kw)
-    b = lsh_cosine_topk(df, df, vectorized=True, **kw)
+    _force_udf(monkeypatch, False)
+    a = lsh_cosine_topk(df, df, **kw)
+    _force_udf(monkeypatch, True)
+    b = lsh_cosine_topk(df, df, **kw)
     ka = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in a.collect()}
     kb = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in b.collect()}
     assert ka == kb and len(ka) > 0
 
 
-def test_ivf_vectorized_equals_literal_chain(spark):
+def test_ivf_vectorized_equals_literal_chain(spark, monkeypatch):
     """One-hot centroids + integer embeddings → exact scores → the
     pandas_udf argmax/argsort must reproduce the literal-chain cell
     assignment (including the lower-index tie-break) and therefore the
@@ -150,8 +187,10 @@ def test_ivf_vectorized_equals_literal_chain(spark):
     df = _int_embeddings(spark, 300, dim)
     centroids = [[1.0 if i == c else 0.0 for i in range(dim)] for c in range(8)]
     kw = dict(k=5, n_centroids=8, nprobe=3, centroids=centroids)
-    a = ivf_cosine_topk(df, df, vectorized=False, **kw)
-    b = ivf_cosine_topk(df, df, vectorized=True, **kw)
+    _force_udf(monkeypatch, False)
+    a = ivf_cosine_topk(df, df, **kw)
+    _force_udf(monkeypatch, True)
+    b = ivf_cosine_topk(df, df, **kw)
     ka = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in a.collect()}
     kb = {(r["query_id"], r["neighbor_id"], r["rank"]) for r in b.collect()}
     assert ka == kb and len(ka) > 0
@@ -228,10 +267,7 @@ def test_minhash_udf_bit_identical_both_families(spark):
     families — exact integer arithmetic, so equality is guaranteed,
     not approximate."""
     from recipys_spark.functions.text import tokens
-    from recipys_spark.operators.dedup import (
-        minhash_signature,
-        minhash_signature_udf,
-    )
+    from recipys_spark.operators.dedup import minhash_signature_udf
 
     texts = [
         "the quick brown fox jumps over the lazy dog",
@@ -239,7 +275,7 @@ def test_minhash_udf_bit_identical_both_families(spark):
         "naïve ütf8 tökens ärö hashed by bytes",
         "a",
         "x " * 40 + "unique tail",
-    ]
+    ] + UNICODE_EDGE_TEXTS
     df = spark.createDataFrame(pd.DataFrame({"text": texts})).select(
         F.array_distinct(tokens(F.col("text"))).alias("toks")
     )
@@ -252,7 +288,7 @@ def test_minhash_udf_bit_identical_both_families(spark):
             assert list(r.e) == list(r.v), fam
 
 
-def test_minhash_lsh_vectorized_equals_expression(spark):
+def test_minhash_lsh_vectorized_equals_expression(spark, monkeypatch):
     """The full LSH pipeline emits identical verified pairs on both
     signature paths, for both hash families."""
     from recipys_spark.operators.dedup import minhash_lsh_pairs
@@ -268,10 +304,12 @@ def test_minhash_lsh_vectorized_equals_expression(spark):
         pd.DataFrame({"doc_id": range(len(base)), "text": base})
     )
     for fam in ("xxhash64", "md5"):
-        a = minhash_lsh_pairs(df, bands=16, threshold=0.6, hash_family=fam,
-                              vectorized=False).toPandas()
-        b = minhash_lsh_pairs(df, bands=16, threshold=0.6, hash_family=fam,
-                              vectorized=True).toPandas()
+        b = minhash_lsh_pairs(df, bands=16, threshold=0.6,
+                              hash_family=fam).toPandas()
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "minhash_signature_udf", minhash_mirror_udf)
+            a = minhash_lsh_pairs(df, bands=16, threshold=0.6,
+                                  hash_family=fam).toPandas()
         assert sorted(zip(a.id_a, a.id_b, a.jaccard.round(9))) == sorted(
             zip(b.id_a, b.id_b, b.jaccard.round(9))
         ), fam
@@ -339,16 +377,15 @@ def test_signature_udfs_null_embedding_yields_null(spark):
             assert r.se is not None and r.cells is not None
 
 
-def test_topk_paths_agree_on_degenerate_corpus(spark):
+def test_topk_paths_agree_on_degenerate_corpus(spark, monkeypatch):
     """End-to-end: with a NULL-embedding row and a zero vector in the
     corpus, both LSH paths run without task failure, never rank the
     zero vector above real neighbors, and drop the NULL row."""
     df = _degenerate_df(spark)
     queries = df.where(F.col("vec_id") == 0)
     for vec in (False, True):
-        out = lsh_cosine_topk(
-            queries, df, k=10, n_planes=4, dim=4, vectorized=vec
-        ).collect()
+        _force_udf(monkeypatch, vec)
+        out = lsh_cosine_topk(queries, df, k=10, n_planes=4, dim=4).collect()
         ids = [r.neighbor_id for r in out]
         assert 2 not in ids, (vec, out)          # NULL row unreachable
         if 3 in ids:                             # zero vector: last, never first
@@ -359,10 +396,10 @@ def test_topk_paths_agree_on_degenerate_corpus(spark):
         assert cosmap.get(1) is not None
 
     for vec in (False, True):
+        _force_udf(monkeypatch, vec)
         out = ivf_cosine_topk(
             queries, df, k=10,
             centroids=[[1.0, 0, 0, 0], [0, 0, 0, 1.0]], nprobe=2,
-            vectorized=vec,
         ).collect()
         ids = [r.neighbor_id for r in out]
         assert 2 not in ids, (vec, out)
@@ -373,7 +410,7 @@ def test_topk_paths_agree_on_degenerate_corpus(spark):
 def test_recommend_lsh_params_sizing():
     """The docstring formulas, executable (VERDICT r3 #7): bucket-size
     bound drives n_planes; n_tables buys recall back above 12 planes;
-    the vectorize gate matches the planes×dim node count."""
+    the size gate engages at the recommended planes × dim."""
     from recipys_spark.operators.similarity import recommend_lsh_params
 
     p6 = recommend_lsh_params(10**6, dim=64)
@@ -381,7 +418,7 @@ def test_recommend_lsh_params_sizing():
     assert p6["expected_bucket_rows"] <= 4_000
     p9 = recommend_lsh_params(10**9, dim=768)
     assert p9["n_planes"] == 18 and p9["n_tables"] >= 2
-    assert p9["vectorized"]  # 18*768 >> 4096
+    assert similarity._vectorize(p9["n_planes"], 768)  # 18*768 >> 4096
     p11 = recommend_lsh_params(10**11, dim=768)
     assert 24 <= p11["n_planes"] <= 27 and p11["n_tables"] <= 8
     # floors and caps
@@ -470,8 +507,7 @@ def test_lsh_auto_respects_explicit_n_tables_and_weights(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.limit(3)
     # force the advisor to recommend many tables
-    big = dict(n_planes=20, n_tables=4, vectorized=False,
-               expected_bucket_rows=1)
+    big = dict(n_planes=20, n_tables=4, expected_bucket_rows=1)
     with mock.patch.object(sim, "recommend_lsh_params", return_value=big):
         # explicit weights + auto planes: no "explicit weights imply
         # n_tables=1" error, and the weights' plane count wins
@@ -488,7 +524,7 @@ def test_lsh_auto_respects_explicit_n_tables_and_weights(spark):
 
         with mock.patch.object(sim, "hyperplane_signature", side_effect=spy):
             out2 = sim.lsh_cosine_topk(
-                q, emb, k=2, n_planes=None, n_tables=2, vectorized=False
+                q, emb, k=2, n_planes=None, n_tables=2
             )
             # 2 caller tables × (1 + 20 planes) probes — just run it
             assert out2.count() >= 0
