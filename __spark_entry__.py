@@ -578,8 +578,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             on="user_id",
             left_ts="ts",
             right_ts="fts",
-            strategy="salted",
-            bucket_size=6 * 3600,
+            skew_bucket_size=6 * 3600,
         ).select(*_EVENTS_KEYS, "feat")
 
     q["asof_join_salted"] = asof_salted

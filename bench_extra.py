@@ -6,10 +6,11 @@ query with the noop sink without paying for the whole suite, (b) dump
 ``explain("formatted")`` before/after a change into plans/r07/, and
 (c) label jobs so the event log is readable.
 
-Usage:
+Usage (defaults: the sf0.1 testdata, local[os.cpu_count()], 3 repeats):
     python bench_extra.py q1 q2 ...            # time the named queries
     python bench_extra.py --plans q1 q2 ...    # also write plans/r07/<q>_<tag>.txt
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 SPARK_GRAFT_BENCH_REPEATS=3 \
+    python bench_extra.py --bake-advisor       # flagship bake, default vs advisor sizing
+    SPARK_GRAFT_SF_DIR=<sf dir> SPARK_GRAFT_CPUS=2 SPARK_GRAFT_BENCH_REPEATS=5 \
         python bench_extra.py --tag after impute_knn
 """
 
@@ -86,8 +87,8 @@ def main() -> None:
         args.remove("--tag")
         args.remove(tag)
     names = [a for a in args if not a.startswith("--")]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
     spark = get_spark(parallelism=cpus, app_name="bench_extra",
                       shuffle_partitions=max(cpus, 8))

@@ -25,8 +25,10 @@ copies each bucket its predecessor's last rows, so a frame of k prior
 rows never crosses a bucket (StepRolling's :func:`salted_trailing`,
 transcripts.assemble_context's salted plan). The as-of join's hot-key
 plan (operators/asof.py) is :func:`salted_fill` over a donor struct.
-This module owns how to salt; when to salt is plans/advisor.py's
-``skew_buckets``, under the crossovers below.
+This module owns how to salt. Each step names the column its salted
+plan buckets by (``Step.skew_sequence``); when to salt, and how wide a
+bucket is, is plans/advisor.py's ``skew_buckets``, from
+:func:`group_size_stats` under the crossovers below.
 
 When to salt (measured, see BENCH.md): the salted plan costs extra
 shuffles and forfeits cross-step window fusion, so it LOSES below
@@ -64,12 +66,26 @@ def _ns_join(left: DataFrame, right: DataFrame, groups, extra, how="left"):
     return l.join(r, on=[_GKEY, *extra], how=how).drop(_GKEY)
 
 
-def _bucket_expr(df: DataFrame, sequence: str, bucket_size: int):
-    dtype = dict(df.dtypes)[sequence]
+def bucketable(dtype: str) -> bool:
+    """True when a salted plan can bucket by a sequence column of this
+    type (numeric or temporal)."""
+    return dtype in ("timestamp", "timestamp_ntz", "date") or dtype.startswith(
+        ("int", "bigint", "smallint", "tinyint", "double", "float", "decimal", "long")
+    )
+
+
+def _seq_num(sequence: str, dtype: str):
+    """The numeric form buckets are cut from: seconds for a timestamp,
+    days for a date, the value itself otherwise."""
     if dtype in ("timestamp", "timestamp_ntz"):
-        base = F.unix_timestamp(F.col(sequence))
-    else:
-        base = F.col(sequence).cast("double")
+        return F.unix_timestamp(F.col(sequence))
+    if dtype == "date":
+        return F.unix_date(F.col(sequence))
+    return F.col(sequence).cast("double")
+
+
+def _bucket_expr(df: DataFrame, sequence: str, bucket_size: int):
+    base = _seq_num(sequence, dict(df.dtypes)[sequence])
     return F.floor(base / F.lit(float(bucket_size))).cast("long")
 
 
@@ -563,35 +579,37 @@ def salted_trailing(
     )
 
 
-def group_size_stats(df: DataFrame, groups: Sequence[str], sequence: str) -> dict:
+def group_size_stats(df: DataFrame, groups: Sequence[str], sequences) -> dict:
     """One aggregation pass over the group-count table: group count,
-    p50/p99/max group sizes, and the sequence span of the LARGEST group
-    (what bucket sizing needs). Cheap relative to any windowed step —
-    run it once per table, not per step."""
-    groups = list(groups)
-    dtype = dict(df.dtypes)[sequence]
-    if dtype in ("timestamp", "timestamp_ntz"):
-        seq_num = F.unix_timestamp(F.col(sequence))
-    else:
-        seq_num = F.col(sequence).cast("double")
+    p50/p99/max group sizes, and ``spans``, the span of each of
+    ``sequences`` (a name or a list; :func:`bucketable` ones only)
+    within the LARGEST group, in bucket units (what bucket sizing
+    needs). Cheap relative to any windowed step — run it once per
+    table, not per step."""
+    sequences = [sequences] if isinstance(sequences, str) else list(sequences)
+    dtypes = dict(df.dtypes)
+    nums = {s: _seq_num(s, dtypes[s]) for s in sequences if bucketable(dtypes[s])}
     counts = df.groupBy(*groups).agg(
         F.count("*").alias("__n"),
-        (F.max(seq_num) - F.min(seq_num)).alias("__span"),
+        F.struct(*[(F.max(n) - F.min(n)).alias(s) for s, n in nums.items()]).alias(
+            "__spans"
+        ),
     )
     row = counts.agg(
         F.count("*").alias("n_groups"),
         F.max("__n").alias("max_rows"),
         F.percentile_approx("__n", F.array(F.lit(0.5), F.lit(0.99)), F.lit(10_000)).alias("q"),
-        F.max_by("__span", "__n").alias("max_span"),
+        F.max_by("__spans", "__n").alias("spans"),
         F.sum("__n").alias("total_rows"),  # free in the same pass —
         # saves callers (plans/advisor.py) a second full-table count
     ).first()
+    spans = row.spans.asDict() if row.spans is not None else {}
     return {
         "n_groups": row.n_groups,
         "p50_rows": int(row.q[0]),
         "p99_rows": int(row.q[1]),
         "max_rows": int(row.max_rows),
-        "max_group_span": float(row.max_span) if row.max_span is not None else 0.0,
+        "spans": {s: float(spans.get(s) or 0.0) for s in nums},
         "total_rows": int(row.total_rows),
     }
 
@@ -617,17 +635,17 @@ def recommend_skew_bucket_size(
     """Measured-crossover advisor (BENCH.md): below ~10^6–10^7 rows in
     the largest group the plain single-window plan WINS (salting costs
     extra shuffles and forfeits window fusion); above it, salt with
-    buckets of ~10^5–10^6 rows. Returns a ``skew_bucket_size`` in
-    SEQUENCE units for StepHistorical/StepImputeFill/StepSessionize,
-    or None when the plain plan is the right call. Pass precomputed
-    ``stats`` (one ``group_size_stats`` per table) to derive multiple
-    per-step-class recommendations from a single probe pass."""
+    buckets of ~10^5–10^6 rows. Returns a ``skew_bucket_size`` in units
+    of ``sequence`` (seconds for a timestamp), or None when the plain
+    plan is the right call. Pass precomputed ``stats`` (one
+    ``group_size_stats`` per table over every sequence) to size several
+    steps' buckets from a single probe pass."""
     if stats is None:
         stats = group_size_stats(df, groups, sequence)
     if stats["max_rows"] < salt_above_rows:
         return None
     n_buckets = max(2, stats["max_rows"] // target_rows_per_bucket)
-    span = stats["max_group_span"]
+    span = stats["spans"].get(sequence, 0.0)
     if span <= 0:
         return None  # degenerate (constant sequence) — salting can't bucket
     return max(1, int(span / n_buckets))

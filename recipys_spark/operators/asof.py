@@ -14,25 +14,22 @@ attribution, nearest-reading calibration) and are deliberately NOT
 reachable from StepAsofJoin's feature path unless asked for
 explicitly.
 
-Two physical strategies:
+Two physical plans:
 
-- ``union``  (default, scale path): tag and union both sides, then one
+- union (default, scale path): tag and union both sides, then one
   window pass ``last(donor_row_struct, ignorenulls=True)`` over
   ``partitionBy(keys).orderBy(ts, side)`` — right rows sort *before*
   left rows at equal ts, so matches are inclusive. One shuffle of
-  left+right, no row blowup, skew handled by AQE; this is the plan
-  that survives 100 TB.
-- ``broadcast`` (small dimension side): broadcast a range join
-  ``right_ts <= left_ts`` then keep the max-ts match per left row via
-  ``max_by``. Row blowup is bounded by the right side's per-key
-  cardinality — only for genuinely small right tables.
-- ``salted`` (hot single key): the union strategy still windows on
-  ``partitionBy(keys)`` — one task per key. The salted variant runs the
-  same backward fill of the right-row donor struct through
-  functions/skew.salted_fill, bucketed by time: intra-bucket window
-  within (key, bucket), per-bucket edge donors forward-filled across
-  buckets (tiny), join-back and coalesce. Exactly equal to ``union``;
-  use when one key dominates.
+  left+right, no row blowup; this is the plan that survives 100 TB.
+- salted (hot single key, selected by ``skew_bucket_size``): the union
+  plan still windows on ``partitionBy(keys)`` — one task per key. The
+  salted plan runs the same backward fill of the right-row donor
+  struct through functions/skew.salted_fill, bucketed by time:
+  intra-bucket window within (key, bucket), per-bucket edge donors
+  forward-filled across buckets (tiny), join-back and coalesce.
+  Exactly equal to union. StepAsofJoin names its timestamp as its
+  ``skew_sequence``, so plans/advisor.skew_buckets salts it only past
+  the measured crossover.
   Measured (BENCH.md): parity at a 2M-row hot key, 40x faster at 16M
   (union 400s -> salted 10s, local[32]).
 """
@@ -80,8 +77,7 @@ def asof_join(
     right_ts: Optional[str] = None,
     tolerance: Union[str, int, float, None] = None,
     suffix: str = "",
-    strategy: str = "union",
-    bucket_size: Optional[int] = None,
+    skew_bucket_size: Optional[int] = None,
     direction: str = "backward",
 ) -> DataFrame:
     """Columns returned: all of ``left`` + right's value columns
@@ -94,25 +90,20 @@ def asof_join(
     - ``forward``: earliest right row with ``r_ts >= l_ts``;
     - ``nearest``: whichever of the two is closer in time; exact ties
       go BACKWARD (the deterministic rule — pandas leaves it to
-      float coincidence). Union strategy only costs one extra window
-      over the SAME sorted exchange.
+      float coincidence). It costs one extra window over the SAME
+      sorted exchange.
 
-    ``backward``/``forward`` are supported by ``union`` and
-    ``broadcast``; ``nearest`` by ``union``. The ``salted`` hot-key
-    plan stays backward-only (its cross-bucket donor forward-fill is
+    ``skew_bucket_size`` (seconds of ``left_ts`` per bucket) selects
+    the salted hot-key plan; None runs the union plan. The salted plan
+    is backward-only (its cross-bucket donor forward-fill is
     direction-specific; mirror the bucketing by time-reversal upstream
-    if a skewed forward join is ever needed).
-
-    ``bucket_size`` (seconds of ``ts`` per bucket) is required for the
-    ``salted`` strategy."""
+    if a skewed forward join is ever needed)."""
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(
             f"direction must be backward/forward/nearest, got {direction!r}"
         )
-    if direction != "backward" and strategy == "salted":
-        raise ValueError("the salted strategy supports direction='backward' only")
-    if direction == "nearest" and strategy != "union":
-        raise ValueError("direction='nearest' is supported by the union strategy")
+    if direction != "backward" and skew_bucket_size is not None:
+        raise ValueError("the salted plan supports direction='backward' only")
     keys = [on] if isinstance(on, str) else list(on)
     right_ts = right_ts or left_ts
     # as in SQL, a NULL key or timestamp never matches: without this the
@@ -128,47 +119,6 @@ def asof_join(
             "pass a suffix= to disambiguate"
         )
     tol = _tolerance_seconds(tolerance)
-
-    if strategy == "broadcast":
-        r = right.select(
-            *[F.col(k).alias(f"__r_{k}") for k in keys],
-            F.col(right_ts).alias("__r_ts"),
-            *[F.col(c) for c in value_cols],
-        )
-        cond = F.lit(True)
-        for k in keys:
-            cond = cond & (F.col(k) == F.col(f"__r_{k}"))
-        lt = left.schema[left_ts].dataType
-        rt = right.schema[right_ts].dataType
-        l_num = _ts_num(F.col(left_ts), lt)
-        r_num = _ts_num(F.col("__r_ts"), rt)
-        if direction == "forward":
-            cond = cond & (r_num >= l_num)
-            if tol is not None:
-                cond = cond & (r_num - l_num <= F.lit(tol))
-        else:
-            cond = cond & (r_num <= l_num)
-            if tol is not None:
-                cond = cond & (l_num - r_num <= F.lit(tol))
-        joined = left.withColumn("__lid", F.monotonically_increasing_id()).join(
-            F.broadcast(r), cond, "left"
-        )
-        # latest (backward) / earliest (forward) matching right row
-        pick = F.max_by if direction == "backward" else F.min_by
-        aggs = [
-            pick(F.col(c), F.col("__r_ts")).alias(out_names[c]) for c in value_cols
-        ]
-        out = (
-            joined.groupBy("__lid", *[F.col(c) for c in left.columns])
-            .agg(*aggs)
-            .drop("__lid")
-        )
-        return out.select(*left.columns, *[out_names[c] for c in value_cols])
-
-    if strategy not in ("union", "salted"):
-        raise ValueError(f"unknown asof strategy {strategy!r}")
-    if strategy == "salted" and not bucket_size:
-        raise ValueError("the salted strategy requires bucket_size (seconds)")
 
     l_tagged = left.select(
         *[F.col(c) for c in left.columns],
@@ -230,13 +180,14 @@ def asof_join(
     null_ts_guard = F.col("__ts").isNotNull()
 
     if direction in ("backward", "forward"):
-        if strategy == "salted":
+        if skew_bucket_size is not None:
             from recipys_spark.functions.skew import salted_fill
 
             # w_back's fill, bucketed by ts so a hot key spreads out
             filled = salted_fill(
                 unioned.withColumn("__match", donor), ["__match"], keys,
-                "__ts", bucket_size, order=["__ts", _SIDE], null_key_donors=False,
+                "__ts", skew_bucket_size, order=["__ts", _SIDE],
+                null_key_donors=False,
             )
         elif direction == "backward":
             matched = F.last(donor, ignorenulls=True).over(w_back)
@@ -291,9 +242,8 @@ class StepAsofJoin(Step):
         right_ts: str,
         tolerance: Union[str, int, float, None] = None,
         suffix: str = "",
-        strategy: str = "union",
         role: str = "predictor",
-        bucket_size: Optional[int] = None,
+        skew_bucket_size: Optional[int] = None,
         direction: str = "backward",
     ) -> None:
         from recipys_spark.selector import Selector
@@ -303,9 +253,8 @@ class StepAsofJoin(Step):
         self.right_ts = right_ts
         self.tolerance = tolerance
         self.suffix = suffix
-        self.strategy = strategy
         self.role = role
-        self.bucket_size = bucket_size
+        self.skew_bucket_size = skew_bucket_size
         self.direction = direction
         self.desc = f"Point-in-time as-of join ({direction})"
 
@@ -317,26 +266,25 @@ class StepAsofJoin(Step):
             if c not in keys
         }
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        if self.direction != "backward":
+            return None  # the salted plan is backward-only
+        return self._first_sequence(ingredients, temporal=True)
+
     def do_transform(self, ingredients: Ingredients):
         if not self.group_columns:
             raise ValueError("StepAsofJoin requires a group role column")
-        dtypes = ingredients.dtypes
-        ts_cols = [
-            c
-            for c in self.sequence_columns
-            if dtypes[c] in ("timestamp", "timestamp_ntz")
-        ]
-        if not ts_cols:
+        left_ts = self._first_sequence(ingredients, temporal=True)
+        if left_ts is None:
             raise ValueError("StepAsofJoin requires a timestamp sequence column")
         return asof_join(
             ingredients.df,
             self.right,
             on=self.group_columns,
-            left_ts=ts_cols[0],
+            left_ts=left_ts,
             right_ts=self.right_ts,
             tolerance=self.tolerance,
             suffix=self.suffix,
-            strategy=self.strategy,
-            bucket_size=self.bucket_size,
+            skew_bucket_size=self.skew_bucket_size,
             direction=self.direction,
         )

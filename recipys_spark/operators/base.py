@@ -48,10 +48,10 @@ class Step:
     #: output row) — lets the memoized Ingredients.row_count() cache
     #: flow through so later fitted steps skip their count probe
     _row_preserving: bool = False
-    #: True while ``skew_bucket_size`` holds a bucket that
-    #: ``Recipe.prep(auto_skew=True)`` derived (plans/advisor.assign_bucket)
-    #: rather than one the user chose
-    _auto_skew_assigned: bool = False
+    #: bucket width of the salted plan, in units of the column
+    #: ``skew_sequence`` names; None runs the plain plan. Set by the
+    #: user or by plans/advisor.recommend_pipeline_config(apply=True)
+    skew_bucket_size: Optional[int] = None
 
     def __init__(self, sel: Optional[Selector] = None) -> None:
         self.sel = sel if sel is not None else Selector("all columns")
@@ -120,13 +120,21 @@ class Step:
     def transform(self, ingredients: Ingredients) -> Ingredients:
         if not self._trained:
             raise RuntimeError(f"{type(self).__name__} must be fitted before transform.")
+        if self.skew_bucket_size is not None and self.skew_sequence(ingredients) is None:
+            raise ValueError(
+                f"{type(self).__name__} has no salted plan as configured, so "
+                f"skew_bucket_size={self.skew_bucket_size!r} cannot apply"
+            )
         df = self.do_transform(ingredients)
         out = ingredients.with_df(df)
         if self._row_preserving:
             out._row_count = ingredients._row_count
-        for col, role in self.new_column_roles().items():
-            if col in df.columns:
-                out.roles[col] = [role]
+        new_roles = self.new_column_roles()
+        if new_roles:
+            columns = set(df.columns)  # one schema analysis, not one per column
+            for col, role in new_roles.items():
+                if col in columns:
+                    out.roles[col] = [role]
         return out
 
     def fit_transform(self, ingredients: Ingredients) -> Ingredients:
@@ -143,6 +151,29 @@ class Step:
     def new_column_roles(self) -> dict[str, str]:
         """Role assignments for columns this step adds (name → role)."""
         return {}
+
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        """The column this step's salted plan buckets by, as configured,
+        or None when it has none (the default). ``skew_bucket_size`` is
+        in this column's units (seconds for a timestamp); the step's
+        salted branch and plans/advisor.skew_buckets both read it."""
+        return None
+
+    def _sequence_roles(self, ingredients: Ingredients) -> list[str]:
+        """The sequence roles the step orders by: the fitted ones, or
+        before fit (an advisor probe) the roles of ``ingredients``."""
+        return self.sequence_columns if self._trained else select_sequence(ingredients)
+
+    def _first_sequence(
+        self, ingredients: Ingredients, temporal: bool = False
+    ) -> Optional[str]:
+        """The first of :meth:`_sequence_roles` (with ``temporal``, the
+        first timestamp one), or None."""
+        seqs = self._sequence_roles(ingredients)
+        if temporal:
+            dtypes = ingredients.dtypes
+            seqs = [c for c in seqs if dtypes[c] in ("timestamp", "timestamp_ntz")]
+        return seqs[0] if seqs else None
 
     # -- fitted-state (de)serialization for Recipe.save/load ------------
 

@@ -112,6 +112,9 @@ class StepRolling(Step):
     def new_column_roles(self) -> dict[str, str]:
         return {f"{c}_{self.suffix}": self.role for c in self.columns}
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        return self._first_sequence(ingredients)
+
     def do_transform(self, ingredients: Ingredients):
         from recipys_spark.functions.windows import trailing
 
@@ -124,7 +127,7 @@ class StepRolling(Step):
                 ingredients.df,
                 cols=self.columns,
                 groups=self.group_columns,
-                sequence=self.sequence_columns[0],
+                sequence=self.skew_sequence(ingredients),
                 fun=self.fun,
                 window=self.window,
                 suffix=self.suffix,
@@ -240,6 +243,11 @@ class StepHistorical(Step):
     def new_column_roles(self) -> dict[str, str]:
         return {f"{c}_{self.suffix}": self.role for c in self.columns}
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        if self.fun is Accumulator.MEDIAN:
+            return None  # one plan, no salted form
+        return self._first_sequence(ingredients)
+
     def do_transform(self, ingredients: Ingredients):
         df = ingredients.df
         groups = self.group_columns
@@ -250,14 +258,14 @@ class StepHistorical(Step):
             )
         if self.fun is Accumulator.MEDIAN:
             return self._expanding_median(df, groups, seq)
-        if self.skew_bucket_size:
+        if self.skew_bucket_size is not None:
             from recipys_spark.functions.skew import salted_expanding
 
             return salted_expanding(
                 df,
                 cols=self.columns,
                 groups=groups,
-                sequence=seq[0],
+                sequence=self.skew_sequence(ingredients),
                 fun=self.fun,
                 suffix=self.suffix,
                 bucket_size=self.skew_bucket_size,

@@ -103,19 +103,22 @@ class StepImputeFill(Step):
         streaming/session.py's watermarked features for those."""
         return self.strategy in (None, "zero", "one")
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        if self.strategy not in ("forward", "backward"):
+            return None  # constant or aggregate+join-back: no window
+        return self._first_sequence(ingredients)
+
     def do_transform(self, ingredients: Ingredients):
         df = ingredients.df
         groups, seq = self.group_columns, self.sequence_columns
         if self.skew_bucket_size is not None:
             from recipys_spark.functions.skew import salted_fill
 
-            if not seq:
-                raise ValueError("directional fill requires a sequence role column")
             return salted_fill(
                 df,
                 self.columns,
                 groups,
-                seq[0],
+                self.skew_sequence(ingredients),
                 self.skew_bucket_size,
                 forward=(self.strategy == "forward"),
                 limit=self.limit,

@@ -60,6 +60,9 @@ class StepLag(Step):
     def new_column_roles(self) -> dict[str, str]:
         return {f"{c}_lag_{k}": self.role for c in self.columns for k in self.lags}
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        return self._first_sequence(ingredients)
+
     def do_transform(self, ingredients: Ingredients):
         df = ingredients.df
         if self.skew_bucket_size is not None:
@@ -69,7 +72,7 @@ class StepLag(Step):
                 df,
                 self.columns,
                 self.group_columns,
-                self.sequence_columns[0],
+                self.skew_sequence(ingredients),
                 lags=self.lags,
                 bucket_size=self.skew_bucket_size,
             )
@@ -103,6 +106,9 @@ class StepLead(Step):
     def new_column_roles(self) -> dict[str, str]:
         return {f"{c}_lead_{k}": self.role for c in self.columns for k in self.leads}
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        return self._first_sequence(ingredients)
+
     def do_transform(self, ingredients: Ingredients):
         df = ingredients.df
         if self.skew_bucket_size is not None:
@@ -112,7 +118,7 @@ class StepLead(Step):
                 df,
                 self.columns,
                 self.group_columns,
-                self.sequence_columns[0],
+                self.skew_sequence(ingredients),
                 lags=self.leads,
                 bucket_size=self.skew_bucket_size,
                 lead=True,
@@ -254,16 +260,17 @@ class StepSessionize(Step):
     def new_column_roles(self) -> dict[str, str]:
         return {self.session_col: self.role}
 
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        return self._first_sequence(ingredients, temporal=True)
+
     def do_transform(self, ingredients: Ingredients):
         if not self.sequence_columns:
             raise ValueError("StepSessionize requires a temporal sequence role column")
         seq = self.sequence_columns
-        # pick the first temporal sequence column for the gap computation
-        dtypes = ingredients.dtypes
-        ts_cols = [c for c in seq if dtypes[c] in ("timestamp", "timestamp_ntz")]
-        if not ts_cols:
+        # the first temporal sequence column drives the gap computation
+        ts = self.skew_sequence(ingredients)
+        if ts is None:
             raise ValueError("StepSessionize requires a timestamp sequence column")
-        ts = ts_cols[0]
         gap_s = parse_resolution(self.gap)
         df = ingredients.df
         if self.skew_bucket_size is not None:

@@ -44,17 +44,6 @@ from recipys_spark.operators.base import Step
 from recipys_spark.selector import Selector
 
 
-def _bucketable_dtype(seq_dtype: str) -> bool:
-    """True when the salted plan can bucket by this order-column dtype
-    (numeric/temporal). One predicate shared by assemble_context's
-    guard and StepAssembleContext's auto-skew fallback so the two can
-    never disagree (ADVICE r5: a string sequence column must make the
-    step fall back to the plain plan, not raise mid-transform)."""
-    return seq_dtype in ("timestamp", "timestamp_ntz", "date") or seq_dtype.startswith(
-        ("int", "bigint", "smallint", "tinyint", "double", "float", "decimal", "long")
-    )
-
-
 def assemble_context(
     df: DataFrame,
     budget: int,
@@ -119,8 +108,10 @@ def assemble_context(
             )
         if len(list(order_cols)) != 1:
             raise ValueError("the salted plan supports a single order column")
+        from recipys_spark.functions.skew import bucketable
+
         seq_dtype = dict(df.dtypes)[list(order_cols)[0]]
-        if not _bucketable_dtype(seq_dtype):
+        if not bucketable(seq_dtype):
             raise ValueError(
                 "the salted plan buckets by the order column numerically; "
                 f"order column dtype {seq_dtype!r} has no numeric bucket "
@@ -280,9 +271,8 @@ class StepAssembleContext(Step):
         self.max_turns = max_turns
         self.out_col = out_col
         self.role = role
-        # skew-capable (the auto_skew discovery attribute): when set,
-        # the salted two-phase plan spreads a monster conversation
-        # across buckets instead of one window task
+        # when set, the salted two-phase plan spreads a monster
+        # conversation across buckets instead of one window task
         self.skew_bucket_size = skew_bucket_size
         self.rows_per_bucket = int(rows_per_bucket)
         # NOT pre-trained: fit() must still run once to resolve the
@@ -299,6 +289,23 @@ class StepAssembleContext(Step):
 
     def do_fit(self, ingredients: Ingredients) -> None:  # stateless
         return None
+
+    def skew_sequence(self, ingredients: Ingredients) -> Optional[str]:
+        """The single numeric or temporal order column, when the carry
+        bound holds (a finite ``max_turns`` within ``rows_per_bucket``).
+        A string order column has no bucket form, so the advisor never
+        salts one and a hand-set bucket on one fails at plan build."""
+        from recipys_spark.functions.skew import bucketable
+
+        seqs = self._sequence_roles(ingredients)
+        if (
+            self.max_turns is None
+            or len(seqs) != 1
+            or int(self.max_turns) > self.rows_per_bucket
+            or not bucketable(ingredients.dtypes[seqs[0]])
+        ):
+            return None
+        return seqs[0]
 
     def do_transform(self, ingredients: Ingredients):
         if len(self.columns) != 1:
@@ -317,22 +324,6 @@ class StepAssembleContext(Step):
         conv = self.group_columns
         if len(conv) != 1:
             raise ValueError("StepAssembleContext supports one group column")
-        skew = self.skew_bucket_size
-        if skew is not None and (
-            self.max_turns is None
-            or len(self.sequence_columns) != 1
-            or int(self.max_turns) > self.rows_per_bucket
-            or not _bucketable_dtype(
-                dict(ingredients.df.dtypes)[self.sequence_columns[0]]
-            )
-        ):
-            # auto_skew may assign a bucket to any skew-capable step;
-            # fall back to the plain plan where the salted one can't
-            # apply (unbounded max_turns, multi-column order, a
-            # max_turns larger than the bucket carry, or — ADVICE r5 —
-            # an order column with no numeric bucket form) rather than
-            # failing the recipe
-            skew = None
         return assemble_context(
             ingredients.df,
             budget=self.budget,
@@ -342,7 +333,7 @@ class StepAssembleContext(Step):
             sep=self.sep,
             max_turns=self.max_turns,
             out_col=self.out_col,
-            skew_bucket_size=skew,
+            skew_bucket_size=self.skew_bucket_size,
             rows_per_bucket=self.rows_per_bucket,
         )
 
@@ -354,7 +345,6 @@ class StepAssembleContext(Step):
             "max_turns": self.max_turns,
             "out_col": self.out_col,
             "skew_bucket_size": self.skew_bucket_size,
-            "skew_bucket_auto": self._auto_skew_assigned,
             "rows_per_bucket": self.rows_per_bucket,
         }
 
@@ -366,8 +356,5 @@ class StepAssembleContext(Step):
         self.out_col = state["out_col"]
         # older manifests (pre-round-5 review) lack the skew fields
         self.skew_bucket_size = state.get("skew_bucket_size")
-        # an auto_skew bucket stays auto-derived, so the next prep
-        # re-derives or drops it (plans/advisor.assign_bucket)
-        self._auto_skew_assigned = state.get("skew_bucket_auto", False)
         self.rows_per_bucket = state.get("rows_per_bucket", 100_000)
         self._trained = True

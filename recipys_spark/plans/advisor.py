@@ -6,10 +6,10 @@ recommendations (recommend_skew_bucket_size under the measured BENCH.md
 crossovers), ANN LSH parameters (similarity.recommend_lsh_params), and
 shuffle-partition arithmetic — into one report a 100 TB operator can
 read (and optionally apply) BEFORE ``Recipe.prep``. The salting policy
-itself lives here too, for this report and for
-``Recipe.prep(auto_skew=True)`` alike: ``skew_buckets`` decides every
-step's bucket, and ``assign_bucket`` writes it unless the user chose
-one.
+lives here too: each step names the column its salted plan buckets by
+(``Step.skew_sequence``, None when it has no salted plan), and
+``skew_buckets`` decides when that step salts and how wide each bucket
+is, from the span of that column in the largest group.
 
 Cost: ONE group-count aggregation pass over the input (the
 group_size_stats probe, which also yields the exact row count) plus, if
@@ -32,10 +32,8 @@ this):
     recommend_pipeline_config(df, rec, apply=True)  # thread it all in
 
 ``apply=True`` sets ``spark.sql.shuffle.partitions`` on the session and
-writes each recommended ``skew_bucket_size`` onto its step as a
-HAND-CHOSEN value (untagged — it survives ``prep()``; contrast
-``prep(auto_skew=True)``, whose per-prep probe tags its assignments and
-re-derives them every fit).
+writes each recommended ``skew_bucket_size`` onto its step where none
+is set yet; besides the user, it is the only writer of a bucket.
 """
 
 from __future__ import annotations
@@ -47,8 +45,7 @@ from pyspark.sql import DataFrame
 
 from recipys_spark.functions import skew
 from recipys_spark.ingredients import Ingredients
-from recipys_spark.operators.base import Accumulator
-from recipys_spark.operators.historical import StepHistorical, StepRolling
+from recipys_spark.operators.historical import StepRolling
 from recipys_spark.operators.transcripts import StepAssembleContext
 from recipys_spark.recipe import Recipe
 
@@ -59,70 +56,43 @@ from recipys_spark.recipe import Recipe
 TARGET_ROWS_PER_PARTITION = 4_000_000
 
 
-def takes_skew_bucket(step) -> bool:
-    """Whether ``skew_bucket_size`` switches ``step`` to a salted plan:
-    every step with the knob except an exact-MEDIAN StepHistorical,
-    whose one plan has no salted form (its constructor rejects a
-    bucket)."""
-    return hasattr(step, "skew_bucket_size") and not (
-        isinstance(step, StepHistorical) and step.fun is Accumulator.MEDIAN
-    )
-
-
 def skew_stats(ingredients: Ingredients) -> Optional[dict]:
     """The one skew probe: ``group_size_stats`` over the group roles and
-    the first sequence role (one aggregation pass), or None when the
-    data has no group or no sequence role."""
+    the span of every sequence role (one aggregation pass), or None
+    when the data has no group or no sequence role."""
     groups = ingredients.select_roles("group")
     seqs = ingredients.select_roles("sequence")
     if not groups or not seqs:
         return None
-    return skew.group_size_stats(ingredients.df, groups, seqs[0])
+    return skew.group_size_stats(ingredients.df, groups, seqs)
 
 
-def skew_buckets(stats: Optional[dict], steps) -> list:
+def skew_buckets(stats: Optional[dict], steps, sequences) -> list:
     """The salting policy: each step's ``skew_bucket_size`` (None = the
-    plain plan) for the probe ``stats`` (None = no probe: all plain).
+    plain plan) for the probe ``stats`` (None = no probe: all plain),
+    where ``sequences`` holds each step's ``skew_sequence`` (None = no
+    salted plan).
 
-    Only steps that :func:`takes_skew_bucket` get a bucket. Bounded
-    frames (StepRolling, StepAssembleContext) salt past
+    A bucket is sized from the span of the step's own sequence column.
+    Bounded frames (StepRolling, StepAssembleContext) salt past
     ``skew.AUTO_SKEW_ROLLING_SALT_ABOVE`` rows in the largest group,
-    every other step past ``skew.AUTO_SKEW_SALT_ABOVE``. Writes nothing:
-    :func:`assign_bucket` does."""
-
-    def above(rows):
-        if stats is None:
-            return None
-        return skew.recommend_skew_bucket_size(
-            None, None, None, salt_above_rows=rows, stats=stats
+    every other step past ``skew.AUTO_SKEW_SALT_ABOVE``. Writes
+    nothing."""
+    buckets = []
+    for step, seq in zip(steps, sequences):
+        if stats is None or seq is None:
+            buckets.append(None)
+            continue
+        if isinstance(step, (StepRolling, StepAssembleContext)):
+            above = skew.AUTO_SKEW_ROLLING_SALT_ABOVE
+        else:
+            above = skew.AUTO_SKEW_SALT_ABOVE
+        buckets.append(
+            skew.recommend_skew_bucket_size(
+                None, None, seq, salt_above_rows=above, stats=stats
+            )
         )
-
-    window = above(skew.AUTO_SKEW_SALT_ABOVE)
-    rolling = above(skew.AUTO_SKEW_ROLLING_SALT_ABOVE)
-    bounded = (StepRolling, StepAssembleContext)
-    return [
-        (rolling if isinstance(s, bounded) else window) if takes_skew_bucket(s) else None
-        for s in steps
-    ]
-
-
-def hand_set(step) -> bool:
-    """Whether the user chose ``step``'s bucket: set, and not tagged
-    ``_auto_skew_assigned`` by an earlier ``Recipe.prep(auto_skew=True)``
-    (a tagged bucket was derived from other data and is re-derived)."""
-    return step.skew_bucket_size is not None and not step._auto_skew_assigned
-
-
-def assign_bucket(step, bucket, auto: bool) -> bool:
-    """Write ``bucket`` onto ``step`` unless the user chose its bucket
-    (:func:`hand_set`); returns whether it wrote. ``auto=True`` tags the
-    bucket as derived (``Recipe.prep``), ``auto=False`` makes it count
-    as hand-chosen from then on (the advisor's ``apply=True``)."""
-    if hand_set(step):
-        return False
-    step.skew_bucket_size = bucket
-    step._auto_skew_assigned = auto
-    return True
+    return buckets
 
 
 def recommend_pipeline_config(
@@ -134,14 +104,15 @@ def recommend_pipeline_config(
 ) -> dict:
     """Probe ``df`` once and return the unified sizing report:
 
-    - ``stats``: group_size_stats of the recipe's (group, sequence)
-      roles — group count, p50/p99/max group rows, largest-group span,
-      plus ``total_rows`` — or just ``total_rows`` when ``recipe`` has
-      no group/sequence roles to probe.
-    - ``steps``: per recipe step, its class, whether it is
-      skew-capable, and its ``skew_bucket_size`` under the salting
-      policy :func:`skew_buckets` (the one ``Recipe.prep(auto_skew=
-      True)`` applies) — None where the plain plan wins.
+    - ``stats``: group_size_stats of the recipe's group and sequence
+      roles — group count, p50/p99/max group rows, the largest group's
+      span of each sequence role, plus ``total_rows`` — or just
+      ``total_rows`` when ``recipe`` has no group/sequence roles to
+      probe.
+    - ``steps``: per recipe step, its class, whether it has a salted
+      plan as configured (``skew_capable``), and its
+      ``skew_bucket_size`` under the salting policy
+      :func:`skew_buckets` — None where the plain plan wins.
     - ``shuffle_partitions``: ceil(total_rows / target_rows_per_
       partition) clamped below by the session's default parallelism —
       the number every groupBy/join/window Exchange in the baked plan
@@ -150,23 +121,28 @@ def recommend_pipeline_config(
       names an array embedding column, else None.
 
     ``apply=True`` additionally sets the session's shuffle partitions
-    and writes the recommended bucket sizes onto the steps (untagged =
-    hand-chosen precedence)."""
+    and writes each recommended bucket onto its step where
+    ``skew_bucket_size`` is None; a step that already has one keeps it
+    and its row reports it as ``skew_bucket_kept_user_value``."""
     spark = df.sparkSession
     steps = list(recipe.steps) if recipe is not None else []
-    probe = None
+    probe, seqs = None, [None] * len(steps)
     if recipe is not None and recipe.data is not None:
-        probe = skew_stats(Ingredients(df, recipe.data.roles, check_roles=False))
+        ingredients = Ingredients(df, recipe.data.roles, check_roles=False)
+        seqs = [s.skew_sequence(ingredients) for s in steps]
+        probe = skew_stats(ingredients)
     # one pass: total_rows comes out of the same group-count agg
     stats = probe or {"total_rows": df.count()}
     step_rows = [
         {
             "index": i,
             "class": type(s).__name__,
-            "skew_capable": takes_skew_bucket(s),
+            "skew_capable": seq is not None,
             "skew_bucket_size": bucket,
         }
-        for i, (s, bucket) in enumerate(zip(steps, skew_buckets(probe, steps)))
+        for i, (s, seq, bucket) in enumerate(
+            zip(steps, seqs, skew_buckets(probe, steps, seqs))
+        )
     ]
 
     floor = spark.sparkContext.defaultParallelism
@@ -193,10 +169,14 @@ def recommend_pipeline_config(
     if apply:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
         for row, s in zip(step_rows, steps):
-            # a hand-chosen bucket stays; the report says so instead of
-            # silently replacing it (ADVICE r6)
+            # a bucket already set (by the user or an earlier apply)
+            # stays; the report says so instead of silently replacing it
             bucket = row["skew_bucket_size"]
-            if bucket is not None and not assign_bucket(s, bucket, auto=False):
+            if bucket is None:
+                continue
+            if s.skew_bucket_size is None:
+                s.skew_bucket_size = bucket
+            else:
                 row["skew_bucket_kept_user_value"] = s.skew_bucket_size
         out["applied"] = True
     return out

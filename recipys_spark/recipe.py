@@ -231,24 +231,13 @@ class Recipe:
         self,
         data: Optional[Union[DataFrame, Ingredients]] = None,
         refit: bool = False,
-        auto_skew: bool = False,
     ) -> DataFrame:
         """Fit + transform (train path). Returns the lazy result frame.
 
-        ``auto_skew=True`` runs one group-size probe and configures the
-        salted two-phase plans on skew-capable steps per the measured
-        crossovers — the hands-free version of passing
-        ``skew_bucket_size`` to each step. Without it, buckets an earlier
-        ``auto_skew`` prep derived are dropped; hand-chosen ones stay
-        (plans/advisor.skew_buckets holds the policy)."""
-        from recipys_spark.plans import advisor
-
+        Salted plans for skewed groups are a per-step setting
+        (``skew_bucket_size``); plans/advisor.recommend_pipeline_config
+        (apply=True) sets them from one probe of the data."""
         ingredients = self._check_data(data)
-        steps = [s for s in self.steps if advisor.takes_skew_bucket(s)]
-        steps = [s for s in steps if not advisor.hand_set(s)]
-        stats = advisor.skew_stats(ingredients) if auto_skew and steps else None
-        for s, bucket in zip(steps, advisor.skew_buckets(stats, steps)):
-            advisor.assign_bucket(s, bucket, auto=stats is not None)
         result = self._apply_fit_transform(ingredients, refit=refit)
         # record post-prep roles so bake wraps inputs consistently
         if self.data is not None:

@@ -40,8 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from recipys_spark.functions.worker import ready
-
-_IDLE_TIMEOUT_MS = 6 * 3600 * 1000
+from recipys_spark.streaming.session import _IDLE_TIMEOUT_MS
 
 _OUT_SCHEMA = T.StructType(
     [

@@ -6,7 +6,8 @@ Checks per query (node names are matched whole, at the start of each
 plan line):
 - Exchange count (shuffles — the scale currency)
 - WindowExec count (each is a per-key sort-and-run stage)
-- whole-stage codegen coverage (codegen'd spans vs interpreted)
+- whole-stage codegen spans of the plan that ran (AQE-final; the plan
+  before AQE has not been through codegen yet once it shuffles)
 - parquet PushedFilters / ReadSchema pruning (scan-level pushdown)
 - Python escape hatches (every node whose name says Python, Pandas or
   Arrow: ArrowEvalPython, MapInArrow, FlatMapGroupsInPandas, ...)
@@ -62,6 +63,36 @@ def audit(plan: str) -> dict:
     }
 
 
+def executed_codegen_spans(desc: str) -> int:
+    """Whole-stage codegen spans of the plan that ran, from a formatted
+    plan description (the SQL status store's ``physicalPlanDescription``
+    of an executed query): the distinct ``[codegen id : n]`` of every
+    node outside an ``== Initial Plan ==`` section, so an adaptive plan
+    counts its ``== Final Plan ==`` only."""
+    tree, _, details = desc.partition("\n\n")
+    nodes, initial_col = set(), None
+    for line in tree.splitlines():
+        col = len(line) - len(line.lstrip(" :+-|*"))
+        if initial_col is not None and col >= initial_col:
+            continue  # a node of the initial plan
+        initial_col = None
+        if "== Initial Plan ==" in line:
+            initial_col = col
+            continue
+        m = re.search(r"\((\d+)\)", line)
+        if m:
+            nodes.add(m.group(1))
+    return len(
+        {
+            cg
+            for node, cg in re.findall(
+                r"^\((\d+)\) .*\[codegen id : (\d+)\]", details, re.M
+            )
+            if node in nodes
+        }
+    )
+
+
 _UNITS = {"B": 1, "KiB": 1024, "MiB": 1024**2, "GiB": 1024**3, "TiB": 1024**4}
 
 
@@ -84,15 +115,16 @@ def _fmt_size(n: float) -> str:
     return f"{n:.1f} TiB"
 
 
-def _shuffle_bytes_written(spark) -> float:
-    """Sum of 'shuffle bytes written' over the LAST SQL execution —
-    the executed-plan shuffle VOLUME (VERDICT r6 #5): a regression in
-    shuffle bytes (widened band key, struct donor) is visible even
-    when the Exchange count is unchanged."""
+def _last_execution(spark) -> dict:
+    """Executed-plan facts of the LAST SQL execution: the sum of its
+    'shuffle bytes written' — the shuffle VOLUME (VERDICT r6 #5): a
+    regression in shuffle bytes (widened band key, struct donor) is
+    visible even when the Exchange count is unchanged — and the
+    codegen spans of its AQE-final plan."""
     store = spark._jsparkSession.sharedState().statusStore()
     execs = store.executionsList()
     if execs.isEmpty():
-        return 0.0
+        return {"shuffle_bytes": 0.0, "codegen_spans": 0}
     last = execs.last()
     mv = store.executionMetrics(last.executionId())
     total = 0.0
@@ -101,7 +133,10 @@ def _shuffle_bytes_written(spark) -> float:
         m = it.next()
         if m.name() == "shuffle bytes written" and mv.contains(m.accumulatorId()):
             total += _parse_size(mv.apply(m.accumulatorId()))
-    return total
+    return {
+        "shuffle_bytes": total,
+        "codegen_spans": executed_codegen_spans(last.physicalPlanDescription()),
+    }
 
 
 def main() -> None:
@@ -119,19 +154,21 @@ def main() -> None:
         df = queries[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         a = audit(plan)
-        # executed shuffle volume at sf0.1: run the query through the
-        # noop sink and read the SQL status store's metric values
+        # executed shuffle volume and codegen at sf0.1: run the query
+        # through the noop sink and read the SQL status store
         df_b = queries[name](spark, bytes_sf_dir)
         df_b.write.format("noop").mode("overwrite").save()
-        a["shuffle_bytes"] = _shuffle_bytes_written(spark)
+        a.update(_last_execution(spark))  # codegen spans: AQE-final plan's
         rows.append((name, a))
     with open("PLANS.md", "w") as f:
         f.write(
             "# PLANS — physical-plan audit of the headline queries\n\n"
             f"Generated by scripts/explain_audit.py at {sf_dir} "
             "(AQE on; executedPlan before adaptive re-plan; shuffle bytes "
-            f"from the EXECUTED plan's metrics at {bytes_sf_dir}).\n\n"
-            "| query | shuffles | shuffle bytes (sf0.1) | window execs | codegen spans | "
+            "and codegen spans from the EXECUTED, AQE-final plan at "
+            f"{bytes_sf_dir}).\n\n"
+            "| query | shuffles | shuffle bytes (sf0.1) | window execs | "
+            "codegen spans (sf0.1) | "
             "BHJ | SMJ | python stages | pushed filters |\n"
             "|---|---|---|---|---|---|---|---|---|\n"
         )

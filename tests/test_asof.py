@@ -1,5 +1,6 @@
-"""Point-in-time as-of join: correctness of both physical strategies,
-tolerance handling, and the zero-leakage guarantee."""
+"""Point-in-time as-of join: correctness of both physical plans (union,
+and salted when a ``skew_bucket_size`` is given), tolerance handling,
+and the zero-leakage guarantee."""
 
 import datetime
 
@@ -51,7 +52,7 @@ def pandas_asof(left_pdf, right_pdf, tolerance=None):
     ).sort_values(["key", "ts"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "salted"])
+@pytest.mark.parametrize("strategy", ["union", "salted"])
 def test_asof_matches_pandas(spark, left_pdf, right_pdf, strategy):
     got = (
         asof_join(
@@ -60,8 +61,7 @@ def test_asof_matches_pandas(spark, left_pdf, right_pdf, strategy):
             on="key",
             left_ts="ts",
             right_ts="fts",
-            strategy=strategy,
-            bucket_size=3600,
+            skew_bucket_size=3600 if strategy == "salted" else None,
         )
         .toPandas()
         .sort_values(["key", "ts"])
@@ -72,7 +72,7 @@ def test_asof_matches_pandas(spark, left_pdf, right_pdf, strategy):
     assert list(got.columns) == ["key", "ts", "payload", "feat"]
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "salted"])
+@pytest.mark.parametrize("strategy", ["union", "salted"])
 def test_asof_tolerance(spark, left_pdf, right_pdf, strategy):
     got = (
         asof_join(
@@ -82,8 +82,7 @@ def test_asof_tolerance(spark, left_pdf, right_pdf, strategy):
             left_ts="ts",
             right_ts="fts",
             tolerance="1h",
-            strategy=strategy,
-            bucket_size=3600,
+            skew_bucket_size=3600 if strategy == "salted" else None,
         )
         .toPandas()
         .sort_values(["key", "ts"])
@@ -161,8 +160,8 @@ def test_asof_suffix_collision_raises(spark, left_pdf, right_pdf):
 
 
 def test_asof_salted_equals_union_on_skewed_transcripts(spark):
-    """Salted as-of == union strategy on the skewed conversation
-    fixture (one conversation 20x the rest)."""
+    """Salted as-of == union plan on the skewed conversation fixture
+    (one conversation 20x the rest)."""
     from pyspark.sql import functions as F
 
     from recipys_spark.sources.io import synthetic_transcripts
@@ -183,7 +182,7 @@ def test_asof_salted_equals_union_on_skewed_transcripts(spark):
         )
 
     union = run()
-    salted = run(strategy="salted", bucket_size=1800)
+    salted = run(skew_bucket_size=1800)
     np.testing.assert_allclose(
         salted["feat"].to_numpy(dtype=float),
         union["feat"].to_numpy(dtype=float),
@@ -191,7 +190,7 @@ def test_asof_salted_equals_union_on_skewed_transcripts(spark):
     )
 
     union_t = run(tolerance="15m")
-    salted_t = run(strategy="salted", bucket_size=1800, tolerance="15m")
+    salted_t = run(skew_bucket_size=1800, tolerance="15m")
     np.testing.assert_allclose(
         salted_t["feat"].to_numpy(dtype=float),
         union_t["feat"].to_numpy(dtype=float),
@@ -220,7 +219,7 @@ def _pandas_dir(left_pdf, right_pdf, direction, tolerance=None):
     )
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast"])
+@pytest.mark.parametrize("strategy", ["union"])
 @pytest.mark.parametrize("tolerance", [None, 90 * 60])
 def test_asof_forward_matches_pandas(spark, left_pdf, right_pdf, strategy, tolerance):
     got = (
@@ -230,7 +229,6 @@ def test_asof_forward_matches_pandas(spark, left_pdf, right_pdf, strategy, toler
             on="key",
             left_ts="ts",
             right_ts="fts",
-            strategy=strategy,
             direction="forward",
             tolerance=tolerance,
         )
@@ -303,16 +301,12 @@ def test_asof_direction_guards(spark, left_pdf, right_pdf):
     l, r = spark.createDataFrame(left_pdf), spark.createDataFrame(right_pdf)
     with pytest.raises(ValueError, match="backward/forward/nearest"):
         asof_join(l, r, on="key", left_ts="ts", right_ts="fts", direction="up")
-    with pytest.raises(ValueError, match="salted"):
-        asof_join(
-            l, r, on="key", left_ts="ts", right_ts="fts",
-            direction="forward", strategy="salted", bucket_size=60,
-        )
-    with pytest.raises(ValueError, match="union"):
-        asof_join(
-            l, r, on="key", left_ts="ts", right_ts="fts",
-            direction="nearest", strategy="broadcast",
-        )
+    for direction in ("forward", "nearest"):
+        with pytest.raises(ValueError, match="salted"):
+            asof_join(
+                l, r, on="key", left_ts="ts", right_ts="fts",
+                direction=direction, skew_bucket_size=60,
+            )
 
 
 def test_asof_forward_union_one_shuffle(spark, left_pdf, right_pdf):
@@ -355,10 +349,10 @@ def test_asof_null_left_ts_never_matches(spark):
         assert pd.isna(got.loc[1, "feat"]), direction
 
 
-@pytest.mark.parametrize("strategy", ["union", "broadcast", "salted"])
+@pytest.mark.parametrize("strategy", ["union", "salted"])
 def test_asof_null_keys_match_duckdb(spark, strategy):
     """A NULL key or a NULL right timestamp never matches, as in SQL:
-    every strategy returns what DuckDB's ASOF LEFT JOIN returns (the
+    both plans return what DuckDB's ASOF LEFT JOIN returns (the
     NULL-key left rows used to pick up the NULL-key right row in the
     union plan, and in the salted plan only within its first bucket)."""
     import duckdb
@@ -401,6 +395,6 @@ def test_asof_null_keys_match_duckdb(spark, strategy):
     )
     got = asof_join(
         left, right, on="key", left_ts="ts", right_ts="fts",
-        strategy=strategy, bucket_size=100 if strategy == "salted" else None,
+        skew_bucket_size=100 if strategy == "salted" else None,
     )
     assert {r["id"]: r["feat"] for r in got.collect()} == want

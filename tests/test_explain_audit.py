@@ -13,11 +13,16 @@ _PATH = os.path.join(
 
 
 @pytest.fixture(scope="module")
-def audit():
+def script():
     spec = importlib.util.spec_from_file_location("explain_audit", _PATH)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return mod.audit
+    return mod
+
+
+@pytest.fixture(scope="module")
+def audit(script):
+    return script.audit
 
 
 # row_number() top-k: one Window over two WindowGroupLimit nodes
@@ -79,3 +84,100 @@ def test_mixed_plan_counts(audit):
     assert a["bhj"] == 1 and a["smj"] == 0
     assert a["codegen_spans"] == 2
     assert a["pushed"]
+
+
+# the status store's formatted description of an executed windowed query
+# (noop sink): codegen ran per query stage of the Final Plan, so its
+# nodes carry codegen ids; the Initial Plan's never went through codegen
+# (node 14 is given one here to show the Initial Plan is not counted)
+EXECUTED = """\
+== Physical Plan ==
+OverwriteByExpression (14)
++- AdaptiveSparkPlan (13)
+   +- == Final Plan ==
+      ResultQueryStage (8), Statistics(sizeInBytes=8.0 EiB)
+      +- * Project (7)
+         +- Window (6)
+            +- * Sort (5)
+               +- ShuffleQueryStage (4), Statistics(sizeInBytes=625.0 KiB, rowCount=1.00E+4)
+                  +- Exchange (3)
+                     +- * ColumnarToRow (2)
+                        +- Scan parquet  (1)
+   +- == Initial Plan ==
+      Project (12)
+      +- Window (11)
+         +- Sort (10)
+            +- Exchange (9)
+               +- Scan parquet  (1)
+
+
+(1) Scan parquet 
+Output [3]: [user_id#2L, ts#1, value#4]
+ReadSchema: struct<user_id:bigint,ts:timestamp_ntz,value:double>
+
+(2) ColumnarToRow [codegen id : 1]
+Input [3]: [user_id#2L, ts#1, value#4]
+
+(3) Exchange
+Arguments: hashpartitioning(user_id#2L, 2), ENSURE_REQUIREMENTS, [plan_id=43]
+
+(4) ShuffleQueryStage
+Arguments: 0
+
+(5) Sort [codegen id : 2]
+Arguments: [user_id#2L ASC NULLS FIRST, ts#1 ASC NULLS FIRST], false, 0
+
+(6) Window
+Arguments: [count(value#4) windowspecdefinition(...) AS _we0#13L], [user_id#2L], [ts#1 ASC NULLS FIRST]
+
+(7) Project [codegen id : 3]
+Output [4]: [user_id#2L, ts#1, value#4, _we0#13L AS value_count#8]
+
+(8) ResultQueryStage
+Arguments: 1
+
+(9) Exchange
+Arguments: hashpartitioning(user_id#2L, 2), ENSURE_REQUIREMENTS, [plan_id=22]
+
+(10) Sort [codegen id : 7]
+Arguments: [user_id#2L ASC NULLS FIRST, ts#1 ASC NULLS FIRST], false, 0
+
+(11) Window
+Arguments: [count(value#4) windowspecdefinition(...) AS _we0#13L], [user_id#2L], [ts#1 ASC NULLS FIRST]
+
+(12) Project
+Output [4]: [user_id#2L, ts#1, value#4, _we0#13L AS value_count#8]
+
+(13) AdaptiveSparkPlan
+Arguments: isFinalPlan=true
+
+(14) OverwriteByExpression
+Arguments: NoopWrite
+"""
+
+
+# a shuffle-free query: no adaptive sections, every node ran
+PROJECT_ONLY = """\
+== Physical Plan ==
+* Project (3)
++- * ColumnarToRow (2)
+   +- Scan parquet  (1)
+
+
+(1) Scan parquet 
+Output [1]: [v#0]
+
+(2) ColumnarToRow [codegen id : 1]
+Input [1]: [v#0]
+
+(3) Project [codegen id : 1]
+Output [1]: [(v#0 + 1.0) AS w#1]
+"""
+
+
+def test_codegen_spans_read_the_aqe_final_plan(script):
+    """Three codegen spans ran (scan side, sort, final project) and the
+    Initial Plan's node is not counted; a plan without adaptive
+    sections counts all its nodes."""
+    assert script.executed_codegen_spans(EXECUTED) == 3
+    assert script.executed_codegen_spans(PROJECT_ONLY) == 1

@@ -7,12 +7,12 @@ These tests inspect ``explain`` output rather than results:
 - column pruning: a projection of 2 columns must reach the parquet
   scan's ReadSchema;
 - predicate pushdown: a filter must appear in PushedFilters;
-- broadcast: the as-of broadcast strategy must plan a
-  BroadcastHashJoin / BroadcastNestedLoopJoin, not a sort-merge join;
 - worker start: every function the package ships to Python workers
   calls ``functions.worker.ready()`` first (an AST walk, no Spark);
 - knobs: the package reads no tuning environment variable, and no
-  public operator takes a kernel switch (signature walks, no Spark).
+  public operator takes a kernel switch (signature walks, no Spark);
+- salting: one protocol — no as-of ``strategy=``, no
+  ``prep(auto_skew=)``, and recipe.py imports nothing from plans/.
 """
 
 import ast
@@ -103,23 +103,6 @@ def test_median_one_shuffle_no_join_back(spark, transcripts):
     assert "Join" not in plan, plan
 
 
-def test_asof_broadcast_strategy_broadcasts(spark, transcripts):
-    feats = transcripts.where("role = 'tool'").select(
-        "conv_id", F.col("ts").alias("fts"), F.col("n_chars").alias("feat")
-    )
-    out = asof_join(
-        transcripts.select("conv_id", "turn_idx", "ts"),
-        feats,
-        on="conv_id",
-        left_ts="ts",
-        right_ts="fts",
-        strategy="broadcast",
-    )
-    plan = plan_of(out)
-    assert "Broadcast" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_asof_union_strategy_single_window_pass(spark, transcripts):
     feats = transcripts.where("role = 'tool'").select(
         "conv_id", F.col("ts").alias("fts"), F.col("n_chars").alias("feat")
@@ -130,7 +113,6 @@ def test_asof_union_strategy_single_window_pass(spark, transcripts):
         on="conv_id",
         left_ts="ts",
         right_ts="fts",
-        strategy="union",
     )
     plan = plan_of(out)
     assert len(re.findall(r"\bWindow\b", plan)) == 1, plan
@@ -159,8 +141,7 @@ def test_asof_salted_join_back_reuses_the_window_shuffle(spark, transcripts):
             on="conv_id",
             left_ts="ts",
             right_ts="fts",
-            strategy="salted",
-            bucket_size=3600,
+            skew_bucket_size=3600,
         )
         plan = plan_of(out)
     finally:
@@ -469,3 +450,29 @@ def test_no_kernel_switch_knobs():
             bad += [f"{qual}({p}=)" for p in params if p in _KERNEL_SWITCHES]
     assert n > 100, f"the walk found only {n} callables"
     assert not bad, "\n".join(bad)
+
+
+def test_one_salting_protocol():
+    """A bucket selects a salted plan and only the advisor sets one:
+    the as-of join has no plan switch, ``Recipe.prep`` no skew probe,
+    and recipe.py imports nothing from recipys_spark.plans."""
+    import inspect
+
+    from recipys_spark.operators import StepAsofJoin
+
+    for fn in (asof_join, StepAsofJoin):
+        assert "strategy" not in inspect.signature(fn).parameters, fn
+    assert "auto_skew" not in inspect.signature(Recipe.prep).parameters
+    with open(os.path.join(_PKG, "recipe.py"), encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    imported = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            imported += [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            # a relative import inside recipe.py is relative to the package
+            mod = ".".join(filter(None, ["recipys_spark" * bool(node.level), node.module]))
+            imported += [f"{mod}.{a.name}" for a in node.names]
+    assert imported, "the walk found no imports"
+    bad = [m for m in imported if m.startswith("recipys_spark.plans")]
+    assert not bad, bad

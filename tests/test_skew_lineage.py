@@ -448,18 +448,20 @@ def test_skew_advisor(spark, transcripts):
 
 
 def test_prep_auto_skew_configures_and_matches_plain(spark, monkeypatch):
-    """prep(auto_skew=True): one probe pass configures the salted plan
-    on skew-capable steps when the largest group crosses the
-    (tunable) threshold, leaves StepRolling plain below ITS much
-    higher trailing-window threshold, and produces values identical to
-    the plain plan. An un-skewed fixture stays entirely on the fused
-    single-window plan (bucket stays None)."""
+    """recommend_pipeline_config(apply=True): one probe pass configures
+    the salted plan on skew-capable steps when the largest group
+    crosses the (tunable) threshold, leaves StepRolling plain below ITS
+    much higher trailing-window threshold, and the prep that follows
+    produces values identical to the plain plan. An un-skewed fixture
+    stays entirely on the fused single-window plan (bucket stays
+    None)."""
     import pandas as pd
 
     from recipys_spark import Accumulator, Recipe
     from recipys_spark.functions import skew
     from recipys_spark.operators import StepHistorical
     from recipys_spark.operators.historical import StepRolling
+    from recipys_spark.plans.advisor import recommend_pipeline_config
     from recipys_spark.selector import all_of
 
     # skewed: conv 1 has 400 rows, others 4 (threshold lowered to 100)
@@ -484,15 +486,23 @@ def test_prep_auto_skew_configures_and_matches_plain(spark, monkeypatch):
         )
 
     monkeypatch.setattr(skew, "AUTO_SKEW_SALT_ABOVE", 100)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def advise(rec):
+        try:
+            recommend_pipeline_config(rec.data.df, rec, apply=True)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", partitions)
+        return rec
 
     plain_rec = build()
     plain = (
         plain_rec.prep().toPandas().sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
     )
-    auto_rec = build()
+    auto_rec = advise(build())
     auto = (
-        auto_rec.prep(auto_skew=True).toPandas()
+        auto_rec.prep().toPandas()
         .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
     )
     hist, roll = auto_rec.steps
@@ -515,113 +525,8 @@ def test_prep_auto_skew_configures_and_matches_plain(spark, monkeypatch):
                sequences="turn_idx")
         .add_step(StepHistorical(sel=all_of(["value"]), fun=Accumulator.MEAN))
     )
-    rec2.prep(auto_skew=True)
+    advise(rec2).prep()
     assert rec2.steps[0].skew_bucket_size is None
-
-
-def test_auto_skew_reprobes_on_refit(spark):
-    """Regression: a bucket assigned by a previous auto_skew pass must
-    not be mistaken for a hand-configured one on the next prep."""
-    import pandas as pd
-
-    from recipys_spark import Accumulator, Recipe
-    from recipys_spark.operators import StepHistorical
-    from recipys_spark.selector import all_of
-
-    small = spark.createDataFrame(
-        pd.DataFrame({"g": ["a"] * 10, "t": range(10), "v": [1.0] * 10})
-    )
-    step = StepHistorical(sel=all_of(["v"]), fun=Accumulator.MEAN)
-    rec = Recipe(small, predictors=["v"], groups="g", sequences="t").add_step(step)
-    rec.prep(auto_skew=True)
-    first = step.skew_bucket_size
-    assert getattr(step, "_auto_skew_assigned", False)
-    # force a fake stale value as if a previous probe chose salting
-    step.skew_bucket_size = 123456
-    step._auto_skew_assigned = True
-    rec.prep(small, refit=True, auto_skew=True)
-    # re-probe overwrote the stale auto value (small data → advisor
-    # says plain plan, i.e. the same recommendation as the first pass)
-    assert step.skew_bucket_size == first
-    # but a HAND-set bucket is respected
-    step.skew_bucket_size = 999
-    step._auto_skew_assigned = False
-    rec.prep(small, refit=True, auto_skew=True)
-    assert step.skew_bucket_size == 999
-
-
-def test_prep_without_auto_skew_resets_stale_auto_buckets(spark):
-    """ADVICE r3: a later prep() WITHOUT auto_skew must not silently
-    keep the bucket a previous auto_skew pass probed on different data
-    — auto-assigned buckets are reset; hand-chosen ones persist."""
-    import pandas as pd
-
-    from recipys_spark import Accumulator, Recipe
-    from recipys_spark.operators import StepHistorical
-    from recipys_spark.selector import all_of
-
-    small = spark.createDataFrame(
-        pd.DataFrame({"g": ["a"] * 10, "t": range(10), "v": [1.0] * 10})
-    )
-    step = StepHistorical(sel=all_of(["v"]), fun=Accumulator.MEAN)
-    rec = Recipe(small, predictors=["v"], groups="g", sequences="t").add_step(step)
-    # simulate a stale auto-derived bucket from a previous dataset's probe
-    step.skew_bucket_size = 123456
-    step._auto_skew_assigned = True
-    rec.prep(small, refit=True)
-    assert step.skew_bucket_size is None
-    assert not step._auto_skew_assigned
-    # a hand-chosen bucket (untagged) survives a plain prep
-    step.skew_bucket_size = 777
-    rec.prep(small, refit=True)
-    assert step.skew_bucket_size == 777
-
-
-def test_auto_skew_bucket_stays_auto_across_save_load(spark, monkeypatch, tmp_path):
-    """A bucket prep(auto_skew=True) derived is still auto-derived after
-    save_state/load_state: a later plain prep drops it, and an auto_skew
-    prep on data below the crossover drops it too. Before, the reload
-    lost the tag and both kept the stale bucket as if hand-chosen."""
-    import pandas as pd
-
-    from recipys_spark.functions import skew
-    from recipys_spark.operators import StepAssembleContext
-
-    def frame(n_hot):
-        return spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "conv_id": [1] * n_hot + [2, 2],
-                    "turn_idx": list(range(n_hot)) + [0, 1],
-                    "text": ["a b"] * (n_hot + 2),
-                }
-            )
-        )
-
-    df = frame(400)
-
-    def build():
-        return Recipe(
-            df, predictors=["text"], groups="conv_id", sequences="turn_idx"
-        ).add_step(StepAssembleContext(sel=all_of(["text"]), budget=6))
-
-    monkeypatch.setattr(skew, "AUTO_SKEW_ROLLING_SALT_ABOVE", 100)
-    rec = build()
-    rec.prep(auto_skew=True)
-    bucket = rec.steps[0].skew_bucket_size
-    assert bucket is not None and rec.steps[0]._auto_skew_assigned
-    path = str(tmp_path / "state.json")
-    rec.save_state(path)
-
-    reloaded = build().load_state(path)
-    step = reloaded.steps[0]
-    assert step.skew_bucket_size == bucket and step._auto_skew_assigned
-    reloaded.prep()
-    assert step.skew_bucket_size is None
-
-    reloaded = build().load_state(path)
-    reloaded.prep(frame(4), auto_skew=True)
-    assert reloaded.steps[0].skew_bucket_size is None
 
 
 def test_salted_family_keeps_null_group_rows(spark):

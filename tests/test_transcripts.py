@@ -368,18 +368,16 @@ def test_step_salted_and_auto_skew_fallback(spark, tr_rows):
     ref = _reference(tr_rows, 6, 64)
     for conv, turn, ctx in salted:
         assert ctx == ref[(conv, turn)][0]
-    # unbounded max_turns + auto-assigned bucket: falls back to the
-    # plain plan instead of failing the recipe
+    # unbounded max_turns has no salted plan: a hand-set bucket fails
+    # at plan build with a named error (ROADMAP aim 3) instead of
+    # silently running the plain plan
     rec2 = Recipe(df, predictors=["text"], groups="conv_id", sequences="turn_idx")
     step = StepAssembleContext(
         sel=all_of(["text"]), budget=6, max_turns=None, skew_bucket_size=4
     )
     rec2.add_step(step)
-    out = rec2.prep().collect()
-    for r in out:
-        assert r["context"] == _reference(tr_rows, 6, None)[
-            (r["conv_id"], r["turn_idx"])
-        ][0]
+    with pytest.raises(ValueError, match="no salted plan"):
+        rec2.prep()
 
 
 def test_salted_keeps_null_conv_rows(spark):
@@ -436,34 +434,65 @@ def test_salted_rejects_string_order_column(spark):
     assert out.count() == 2
 
 
-def test_step_fallback_when_max_turns_exceeds_bucket(spark, tr_rows):
-    """Review fix: an auto-assigned bucket with max_turns >
-    rows_per_bucket must fall back to the plain plan, not raise."""
+def _advised(spark, rec, monkeypatch):
+    """The recipe after recommend_pipeline_config(apply=True) with every
+    crossover forced down to one row."""
+    from recipys_spark.functions import skew
+    from recipys_spark.plans.advisor import recommend_pipeline_config
+
+    monkeypatch.setattr(skew, "AUTO_SKEW_SALT_ABOVE", 1)
+    monkeypatch.setattr(skew, "AUTO_SKEW_ROLLING_SALT_ABOVE", 1)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        recommend_pipeline_config(rec.data.df, rec, apply=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    return rec
+
+
+def test_step_fallback_when_max_turns_exceeds_bucket(spark, tr_rows, monkeypatch):
+    """Review fix: with max_turns > rows_per_bucket the step has no
+    salted plan — the advisor leaves it on the plain plan even past the
+    crossover, and a hand-set bucket fails at plan build by name."""
     df = spark.createDataFrame(tr_rows, ["conv_id", "turn_idx", "text"])
-    rec = Recipe(df, predictors=["text"], groups="conv_id", sequences="turn_idx")
-    rec.add_step(
-        StepAssembleContext(
-            sel=all_of(["text"]), budget=6, max_turns=200_000,
-            skew_bucket_size=4, rows_per_bucket=100,
+
+    def build(**kw):
+        return Recipe(
+            df, predictors=["text"], groups="conv_id", sequences="turn_idx"
+        ).add_step(
+            StepAssembleContext(
+                sel=all_of(["text"]), budget=6, max_turns=200_000,
+                rows_per_bucket=100, **kw,
+            )
         )
-    )
+
+    with pytest.raises(ValueError, match="no salted plan"):
+        build(skew_bucket_size=4).prep()
+    rec = _advised(spark, build(), monkeypatch)
+    assert rec.steps[0].skew_bucket_size is None
     out = rec.prep()
     ref = _reference(tr_rows, 6, 200_000)
     for r in out.collect():
         assert r["context"] == ref[(r["conv_id"], r["turn_idx"])][0]
 
 
-def test_step_fallback_on_string_order_column(spark):
-    """ADVICE r5 fix: an auto-assigned bucket on a recipe whose
-    sequence role is a STRING column must fall back to the plain plan
-    (the salted path has no numeric bucket form for it), not raise
-    mid-transform."""
+def test_step_fallback_on_string_order_column(spark, monkeypatch):
+    """ADVICE r5 fix: a recipe whose sequence role is a STRING column
+    has no salted context plan (no numeric bucket form): the advisor
+    leaves it on the plain plan even past the crossover, and a
+    hand-set bucket fails at plan build by name, not mid-transform."""
     rows = [("a", "t0", "one two"), ("a", "t1", "three"), ("b", "t0", "four")]
     df = spark.createDataFrame(rows, ["conv_id", "ord", "text"])
-    rec = Recipe(df, predictors=["text"], groups="conv_id", sequences="ord")
-    rec.add_step(
-        StepAssembleContext(sel=all_of(["text"]), budget=6, skew_bucket_size=4)
-    )
+
+    def build(**kw):
+        return Recipe(
+            df, predictors=["text"], groups="conv_id", sequences="ord"
+        ).add_step(StepAssembleContext(sel=all_of(["text"]), budget=6, **kw))
+
+    with pytest.raises(ValueError, match="no salted plan"):
+        build(skew_bucket_size=4).prep()
+    rec = _advised(spark, build(), monkeypatch)
+    assert rec.steps[0].skew_bucket_size is None
     got = {(r["conv_id"], r["ord"]): r["context"] for r in rec.prep().collect()}
     assert got[("a", "t1")] == "one two"
     assert got[("a", "t0")] == "" and got[("b", "t0")] == ""

@@ -514,17 +514,19 @@ def test_lsh_auto_respects_explicit_n_tables_and_weights(spark):
         w = sim.hyperplane_weights(4, 64)
         out = sim.lsh_cosine_topk(q, emb, k=2, n_planes=None, weights=w)
         assert out.count() >= 0
-        # explicit n_tables survives the advisor
-        captured = {}
+        # explicit n_tables survives the advisor: one signature seed per
+        # table, each with the advisor's 20 planes
+        calls = []
         real_sig = sim.hyperplane_signature
 
         def spy(emb_col, n_planes, dim, seed=42, weights=None):
-            captured.setdefault("planes", n_planes)
+            calls.append((n_planes, seed))
             return real_sig(emb_col, n_planes, dim, seed, weights)
 
         with mock.patch.object(sim, "hyperplane_signature", side_effect=spy):
             out2 = sim.lsh_cosine_topk(
                 q, emb, k=2, n_planes=None, n_tables=2
             )
-            # 2 caller tables × (1 + 20 planes) probes — just run it
             assert out2.count() >= 0
+        assert {planes for planes, _ in calls} == {20}
+        assert len({seed for _, seed in calls}) == 2, calls
